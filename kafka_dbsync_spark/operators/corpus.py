@@ -694,8 +694,7 @@ def bigram_lm_perplexity(
     # (curation_pipeline_v4 3.95 → 5.00 s, ccnet_pipeline 4.52 → 5.33 s
     # median, attributed by single-operator patching in the interleaved
     # harness): the pipelines already materialize the scores lineage,
-    # so the extra cache fill is pure cost there. A/B:
-    # tools/ab/ab_lm.py.
+    # so the extra cache fill is pure cost there.
     doc_grams = grams.groupBy(id_col, *gcols, "w1", "w2").agg(
         F.count("*").alias("k")
     )
@@ -814,7 +813,7 @@ def trigram_backoff_perplexity(
     # flat-to-worse at sf0.1). The columnar cache write/read of the
     # token arrays costs more than two extra tokenize scans at every
     # scale the bench can see — the same verdict as r13's map-only gram
-    # kernel experiment. The A/B harness is tools/ab/ab_lm.py.
+    # kernel experiment.
     tri = doc_trigrams(train_docs, id_col, text_col)
     c123 = tri.groupBy("w1", "w2", "w3").agg(F.count("*").alias("n123"))
     big = doc_bigrams(train_docs, id_col, text_col)
@@ -909,7 +908,7 @@ def dsir_importance_weights(
     # put the persisted shape at 1.75 s median vs 1.21 s for this exact
     # lineage at sf0.1, and it cost curation_pipeline_v4 ~0.5-1 s on
     # top: the cache fill + barrier outweigh the one tokenize scan it
-    # saves at every scale the bench can see (tools/ab/ab_lm.py).
+    # saves at every scale the bench can see.
     doc_toks = (
         docs.select(id_col, F.explode(tokens(text_col)).alias("tok"))
         .groupBy(id_col, "tok")

@@ -5,8 +5,8 @@ as an idempotent keyed UPSERT, every delete as a keyed DELETE, in change
 order. The reference gets ordering for free (sequential JDBC batches in
 Kafka partition order); a set-based engine must make it explicit:
 
-- ``latest_by_key`` — last-write-wins per key (SURVEY.md §2.4 A3): rank by
-  the ordering columns descending within each key, keep rank 1. This is
+- ``latest_by_key`` — last-write-wins per key (SURVEY.md §2.4 A3): keep
+  the row with the greatest ordering columns within each key. This is
   the **only shuffle in the replication path** and it shuffles by the
   merge key, which is exactly the partitioning the downstream merge wants.
 - ``apply_changes`` — pure-Spark MERGE: new_state = changes ∪ base,
@@ -14,61 +14,46 @@ Kafka partition order); a set-based engine must make it explicit:
   ``MERGE INTO base USING dedup(changes) WHEN MATCHED [AND op='d'] ...``
   without requiring a Delta/Iceberg runtime.
 
-Scale notes (100 TB): the window shuffle hash-partitions on the key —
-skewed keys are handled by AQE skew-join/partition splitting since the
-rank is computed per key-group. For a continuously-maintained table, pair
-this with a bucketed base table on the same key so the union-merge reuses
-the partitioning instead of re-shuffling the (large) base.
+Scale notes (100 TB): the dedup shuffle hash-partitions on the key —
+skewed keys collapse map-side (partial aggregation) before they meet.
+For a continuously-maintained table, pair this with a bucketed base
+table on the same key so the union-merge reuses the partitioning
+instead of re-shuffling the (large) base.
 """
 
 from __future__ import annotations
 
 from collections.abc import Sequence
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from kafka_dbsync_spark.functions.entrytype import OP_UPSERT
 
 #: name of the synthetic ordering column used when merging base + changes
 _SEQ = "__seq"
-_RANK = "__rn"
 
 
 def latest_by_key(
     df: DataFrame,
     key_cols: Sequence[str],
     order_cols: Sequence[str],
-    strategy: str = "agg",
 ) -> DataFrame:
     """Keep the last record per key, ordered by ``order_cols`` ascending
     (later = winner). Ties broken by the full order column list — callers
     must pass a total order (e.g. Kafka (partition, offset)).
 
-    Strategies:
+    ``groupBy(keys).agg(max_by(row, order))``: max is associative, so
+    Spark applies **map-side partial aggregation** before the shuffle:
+    each task forwards one candidate per key instead of every record,
+    which both shrinks the shuffle and makes hot keys a non-issue (a
+    skewed key's records collapse to one row per upstream partition
+    before they ever meet). This is the skew-safe form of the engine's
+    one core shuffle.
 
-    - ``agg`` (default): ``groupBy(keys).agg(max_by(row, order))``.
-      max is associative, so Spark applies **map-side partial
-      aggregation** before the shuffle: each task forwards one candidate
-      per key instead of every record, which both shrinks the shuffle
-      and makes hot keys a non-issue (a skewed key's records collapse to
-      one row per upstream partition before they ever meet). This is the
-      skew-safe form of the engine's one core shuffle.
-    - ``window``: row_number over a per-key window — needs a full sort of
-      each key group on one task; kept for callers that also want ranks.
-
-    Both require order values to be non-null on change rows (struct
-    comparison short-circuits on the first differing field).
+    Order values must be non-null on change rows (struct comparison
+    short-circuits on the first differing field).
     """
-    if strategy == "window":
-        w = Window.partitionBy(*key_cols).orderBy(
-            *[F.col(c).desc() for c in order_cols]
-        )
-        return (
-            df.withColumn(_RANK, F.row_number().over(w))
-            .filter(F.col(_RANK) == 1)
-            .drop(_RANK)
-        )
     row = F.struct(*[F.col(c) for c in df.columns])
     order = F.struct(*[F.col(c) for c in order_cols])
     winner = (

@@ -7,11 +7,25 @@ Per micro-batch:
 2. **last-write-wins per key** (A3) — the correctness cliff: a set-based
    merge would otherwise apply duplicate keys in arbitrary order
 3. **group by target table** (A1), then by op (A2)
-4. **one transaction per table** (K11): batched upserts + deletes through
-   the dialect SQL; rollback on failure; Structured Streaming's
-   checkpoint + the idempotent keyed UPSERT give exactly-once effect over
-   at-least-once delivery (docs/puml/kafka-dbsync.puml:28,36-37)
-5. **auto-create / auto-evolve** (K6/K7) from the batch schema
+4. **auto-create / auto-evolve** (K6/K7) from the batch schema
+5. **batched upserts + deletes** through the dialect SQL (K11)
+
+The write contract, shared by this engine, the SCD2 history sink and the
+document sink (they reuse ``transaction``, ``executemany_chunked``,
+``write_changes`` and ``_ensure_table`` below):
+
+- each table's DDL and DML run in ONE transaction — commit at the end,
+  rollback on any failure, the connection always closed;
+- a table counts as created only after that commit: on a target whose
+  DDL is transactional (PostgreSQL) a rollback undoes the CREATE too, so
+  the retry must issue it again;
+- the dead-letter table is written in its own transaction, before any
+  data table.
+
+Structured Streaming's checkpoint + the idempotent keyed UPSERT then give
+exactly-once effect over at-least-once delivery
+(docs/puml/kafka-dbsync.puml:28,36-37): a batch that rolled back is simply
+applied again.
 
 Scale notes: the dedup window shuffles on (table, pk) — the only shuffle
 in the path. The DB write path is AUTO-SELECTED (``distribute="auto"``,
@@ -27,16 +41,20 @@ factory, which says nothing about the TARGET's concurrency. Single-
 writer databases (sqlite, an embedded H2, a constrained PG pool) must
 pass ``distribute=False`` explicitly or large backfill batches will
 open concurrent writers and hit lock errors — see bench.py's apply-path
-engine for the canonical single-writer configuration.
+engine and the ``"distribute": False`` sink config in perfbench/cdc.py
+for the canonical single-writer configuration.
 """
 
 from __future__ import annotations
 
 import logging
-from collections.abc import Callable, Sequence
+from collections.abc import Callable, Iterable, Sequence
+from contextlib import contextmanager
+from itertools import islice
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from kafka_dbsync_spark.functions.entrytype import OP_DELETE, OP_UPSERT
 from kafka_dbsync_spark.operators.merge import latest_by_key
@@ -56,6 +74,79 @@ CORRUPT_TABLE_SCHEMA = (
     "entry_type",
     "created_at",
 )
+
+#: rows per ``executemany`` — driver memory stays O(chunk) however large
+#: the batch (e.g. a backfill replay), while the transaction spans it all
+CHUNK_ROWS = 10_000
+
+
+# -- the write path shared by every DB-API sink ---------------------------------
+@contextmanager
+def transaction(
+    connection_factory: Callable[[], object],
+    known_tables: set[str] | None = None,
+    tables: Iterable[str] = (),
+):
+    """Connect, yield the connection for DDL + DML, commit; roll back on
+    failure; always close. ``tables`` join ``known_tables`` only once the
+    commit succeeded — recording a CREATE earlier would make every retry
+    after a rollback skip it and fail on the missing table."""
+    conn = connection_factory()
+    try:
+        yield conn
+        conn.commit()
+    except Exception:
+        conn.rollback()
+        raise
+    finally:
+        conn.close()
+    if known_tables is not None:
+        known_tables.update(tables)
+
+
+def executemany_chunked(cur, sql: str, params: Iterable[Sequence]) -> int:
+    """``executemany`` over ``params`` in CHUNK_ROWS-row chunks; returns
+    the number of rows written."""
+    it = iter(params)
+    n = 0
+    while chunk := list(islice(it, CHUNK_ROWS)):
+        cur.executemany(sql, chunk)
+        n += len(chunk)
+    return n
+
+
+def write_changes(
+    cur,
+    rows: Iterable,
+    dialect: Dialect,
+    table: str,
+    pk: Sequence[str],
+    value_cols: Sequence[str],
+    op_col: str,
+) -> None:
+    """Batched upserts + deletes of ``rows`` (by ``op_col``) into
+    ``table`` — one pass, each op flushed as its buffer fills. Keys are
+    unique after last-write-wins dedup, so flush order between the
+    upsert and delete statements is free."""
+    cols = [*pk, *value_cols]
+    upsert = dialect.upsert_sql(table, cols, pk)
+    delete = dialect.delete_sql(table, pk)
+    ups: list[tuple] = []
+    dels: list[tuple] = []
+    for r in rows:
+        op = r[op_col]
+        if op == OP_UPSERT:
+            ups.append(tuple(r[c] for c in cols))
+            if len(ups) >= CHUNK_ROWS:
+                executemany_chunked(cur, upsert, ups)
+                ups = []
+        elif op == OP_DELETE:
+            dels.append(tuple(r[c] for c in pk))
+            if len(dels) >= CHUNK_ROWS:
+                executemany_chunked(cur, delete, dels)
+                dels = []
+    executemany_chunked(cur, upsert, ups)
+    executemany_chunked(cur, delete, dels)
 
 
 class CdcApplyEngine:
@@ -119,6 +210,7 @@ class CdcApplyEngine:
         # connections; None lets AQE size the exchange (it will coalesce
         # small batches down to few connections, which is usually right)
         self.num_partitions = num_partitions
+        # tables whose CREATE has committed (see ``transaction``)
         self._known_tables: set[str] = set()
 
     # -- public entry points ------------------------------------------------
@@ -142,67 +234,35 @@ class CdcApplyEngine:
         # single pass over the poll batch
         batch_df = batch_df.persist()
         try:
-            has_errors = "error_reason" in batch_df.columns
-            if has_errors:
-                corrupt = batch_df.filter(F.col("error_reason").isNotNull())
-                if "created_at" not in corrupt.columns:
-                    # dead-letter insertion timestamp (CorruptEventWriter
-                    # populates created_at with now())
-                    corrupt = corrupt.withColumn(
-                        "created_at",
-                        F.date_format(
-                            F.current_timestamp(), "yyyy-MM-dd HH:mm:ss"
-                        ),
-                    )
-                valid = batch_df.filter(F.col("error_reason").isNull())
-                self._handle_corrupt(corrupt)
-            else:
-                valid = batch_df
-
-            # A3: last write wins per (table, key) — before set-based apply
-            order_cols = self.order_cols
-            if order_cols is None:
-                part = [
-                    c for c in ("partition", "kafka_partition") if c in valid.columns
-                ][:1]
-                order_cols = [*part, "offset"]
-            deduped = latest_by_key(
-                valid, [self.table_col, *self.pk_fields], order_cols
-            )
-
-            out_cols = [*self.pk_fields, *self.value_cols, self.op_col]
-            per_table = deduped.select(self.table_col, *out_cols)
-
-            if self._should_distribute(valid):
-                self.last_path = "distributed"
-                self._apply_distributed(per_table)
-            else:
-                self.last_path = "driver"
-                # distinct-tables probe on the CACHED pre-dedup batch (a
-                # one-column partial-agg shuffle) — probing per_table
-                # instead would run the expensive dedup shuffle just to
-                # list tables. Dedup never drops a table, so the sets match.
-                tables = sorted(
-                    r[0]
-                    for r in valid.select(self.table_col).distinct().collect()
-                )
-                if len(tables) > 1:
-                    # fan-out: materialize the deduped batch once with ONE
-                    # parallel job so the N per-table passes read cache
-                    # instead of each re-running the dedup shuffle
-                    per_table = per_table.persist()
-                    try:
-                        per_table.count()
-                        self._apply_driver_side(per_table, tables)
-                    finally:
-                        per_table.unpersist()
-                else:
-                    # single-table batch (one topic → one table, the common
-                    # deployment): stream straight through — persisting
-                    # would only add a materialization pass
-                    self._apply_driver_side(per_table, tables)
+            self._apply_valid(self._split_corrupt(batch_df))
         finally:
             batch_df.unpersist()
+
+    def _apply_valid(self, valid: DataFrame) -> None:
+        # A3: last write wins per (table, key) — before set-based apply
+        order_cols = self.order_cols
+        if order_cols is None:
+            part = [
+                c for c in ("partition", "kafka_partition") if c in valid.columns
+            ][:1]
+            order_cols = [*part, "offset"]
+        deduped = latest_by_key(
+            valid, [self.table_col, *self.pk_fields], order_cols
+        )
+        per_table = deduped.select(
+            self.table_col, *self.pk_fields, *self.value_cols, self.op_col
+        )
+        # the target tables' columns, for DDL
+        routing = (self.table_col, self.op_col)
+        stored = T.StructType([f for f in per_table.schema if f.name not in routing])
+
+        if self._should_distribute(valid):
+            self.last_path = "distributed"
+            self._apply_distributed(per_table, valid, stored)
+        else:
+            self.last_path = "driver"
+            with self._fan_out(valid, per_table) as tables:
+                self._apply_driver_side(per_table, tables, stored)
 
     def _should_distribute(self, valid: DataFrame) -> bool:
         """Pick the apply path. ``distribute=True``/``False`` forces it;
@@ -223,7 +283,56 @@ class CdcApplyEngine:
             )
         return False
 
+    def _transaction(self, *tables: str):
+        return transaction(self.connection_factory, self._known_tables, tables)
+
+    # -- per-table fan-out ------------------------------------------------------
+    def _tables(self, valid: DataFrame) -> list[str]:
+        """Distinct target tables, probed on the CACHED pre-dedup batch (a
+        one-column partial-agg shuffle) — probing a deduped frame instead
+        would run the expensive dedup shuffle just to list tables. Dedup
+        never drops a table, so the sets match."""
+        return sorted(
+            r[0] for r in valid.select(self.table_col).distinct().collect()
+        )
+
+    @contextmanager
+    def _fan_out(self, valid: DataFrame, *frames: DataFrame):
+        """Yield the batch's tables. With more than one, materialize
+        ``frames`` once (ONE parallel job each) so the N per-table passes
+        read cache instead of each re-running the dedup shuffle; a
+        single-table batch (one topic → one table, the common deployment)
+        streams straight through — persisting would only add a
+        materialization pass."""
+        tables = self._tables(valid)
+        fan_out = len(tables) > 1
+        if fan_out:
+            for f in frames:
+                f.persist().count()
+        try:
+            yield tables
+        finally:
+            if fan_out:
+                for f in frames:
+                    f.unpersist()
+
     # -- corrupt branch (K9/K10) ---------------------------------------------
+    def _split_corrupt(self, batch_df: DataFrame) -> DataFrame:
+        """Dead-letter the rows carrying an ``error_reason``; return the
+        rest."""
+        if "error_reason" not in batch_df.columns:
+            return batch_df
+        corrupt = batch_df.filter(F.col("error_reason").isNotNull())
+        if "created_at" not in corrupt.columns:
+            # dead-letter insertion timestamp (CorruptEventWriter
+            # populates created_at with now())
+            corrupt = corrupt.withColumn(
+                "created_at",
+                F.date_format(F.current_timestamp(), "yyyy-MM-dd HH:mm:ss"),
+            )
+        self._handle_corrupt(corrupt)
+        return batch_df.filter(F.col("error_reason").isNull())
+
     def _handle_corrupt(self, corrupt: DataFrame) -> None:
         if not self.corrupt_table and self.errors_tolerance == "all":
             return  # silent-skip mode with no DLQ: nothing to evaluate
@@ -231,56 +340,28 @@ class CdcApplyEngine:
         # batch must not open a DLQ connection (or depend on DLQ health)
         if corrupt.isEmpty():
             return
-        n = 0
         if self.corrupt_table:
-            conn = self.connection_factory()
-            try:
-                cur = conn.cursor()
-                cols = [c for c in CORRUPT_TABLE_SCHEMA if c in corrupt.columns]
-                created = False
-                # stream every dead-letter row in bounded chunks — never
-                # cap (losing DLQ records defeats the DLQ)
-                chunk: list[tuple] = []
-                for r in corrupt.toLocalIterator():
-                    if not created:
-                        if (
-                            self.auto_create
-                            and self.corrupt_table not in self._known_tables
-                        ):
-                            # auto-create the dead-letter table from the
-                            # record shape (IidrCdcSinkTask.java:72-80)
-                            from pyspark.sql import types as T
-
-                            schema = T.StructType(
-                                [f for f in corrupt.schema.fields if f.name in cols]
-                            )
-                            cur.execute(
-                                self.dialect.create_table_sql(
-                                    self.corrupt_table, schema, ()
-                                )
-                            )
-                            self._known_tables.add(self.corrupt_table)
-                        created = True
-                    chunk.append(
+            table = self.corrupt_table
+            cols = [c for c in corrupt.columns if c in CORRUPT_TABLE_SCHEMA]
+            with self._transaction(table) as conn:
+                # auto-create the dead-letter table from the record shape
+                # (IidrCdcSinkTask.java:72-80); its columns are the fixed
+                # CORRUPT_TABLE_SCHEMA, so there is nothing to evolve
+                schema = T.StructType([f for f in corrupt.schema if f.name in cols])
+                self._ensure_table(conn, table, schema, (), evolve=False)
+                # every dead-letter row, in bounded chunks — never cap
+                # (losing DLQ records defeats the DLQ)
+                n = executemany_chunked(
+                    conn.cursor(),
+                    self.dialect.insert_sql(table, cols),
+                    (
                         tuple(
                             self._truncate_reason(r[c]) if c == "error_reason" else r[c]
                             for c in cols
                         )
-                    )
-                    if len(chunk) >= 10_000:
-                        cur.executemany(
-                            self.dialect.insert_sql(self.corrupt_table, cols), chunk
-                        )
-                        n += len(chunk)
-                        chunk = []
-                if chunk:
-                    cur.executemany(
-                        self.dialect.insert_sql(self.corrupt_table, cols), chunk
-                    )
-                    n += len(chunk)
-                conn.commit()
-            finally:
-                conn.close()
+                        for r in corrupt.toLocalIterator()
+                    ),
+                )
         else:
             n = corrupt.count()
         if n == 0:
@@ -299,35 +380,25 @@ class CdcApplyEngine:
 
     # -- apply paths ----------------------------------------------------------
     def _apply_driver_side(
-        self, per_table: DataFrame, tables: list[str] | None = None
+        self, per_table: DataFrame, tables: list[str], stored: T.StructType
     ) -> None:
         """One connection, one transaction per table (the reference's
         shape: a single sink task with a JDBC connection).
 
         Rows stream through the driver via ``toLocalIterator`` in bounded
-        chunks (same discipline as the DLQ path) — driver memory stays
-        O(chunk) no matter how large the batch (e.g. a backfill replay),
-        while the transaction still spans the whole table."""
-        if tables is None:
-            tables = [
-                r[0] for r in per_table.select(self.table_col).distinct().collect()
-            ]
-        for table in sorted(tables):
+        chunks, while the transaction still spans the whole table."""
+        for table in tables:
             tdf = per_table.filter(F.col(self.table_col) == table).drop(self.table_col)
-            conn = self.connection_factory()
-            try:
-                self._ensure_table(conn, table, tdf)
-                self._write_stream(
-                    conn, table, tdf.toLocalIterator(prefetchPartitions=True)
+            with self._transaction(table) as conn:
+                self._ensure_table(conn, table, stored, self.pk_fields)
+                write_changes(
+                    conn.cursor(), tdf.toLocalIterator(prefetchPartitions=True),
+                    self.dialect, table, self.pk_fields, self.value_cols, self.op_col,
                 )
-                conn.commit()
-            except Exception:
-                conn.rollback()
-                raise
-            finally:
-                conn.close()
 
-    def _apply_distributed(self, per_table: DataFrame) -> None:
+    def _apply_distributed(
+        self, per_table: DataFrame, valid: DataFrame, stored: T.StructType
+    ) -> None:
         """Executor-side apply: repartition by (table, pk) so each key
         lands on exactly one partition, then one connection per partition.
         Requires a picklable connection factory (e.g. a psycopg2 DSN
@@ -339,54 +410,27 @@ class CdcApplyEngine:
         op_col = self.op_col
         table_col = self.table_col
 
-        # DDL runs driver-side up front (one connection for all tables) so
-        # executor partitions only ever issue DML — same auto_create/
+        # DDL runs driver-side up front (one transaction for all tables)
+        # so executor partitions only ever issue DML — same auto_create/
         # auto_evolve semantics as the driver-side path. Every table
         # shares the batch schema, so no per-table filtering is needed.
         if self.auto_create or self.auto_evolve:
-            tables = [
-                r[0] for r in per_table.select(table_col).distinct().collect()
-            ]
-            schema_df = per_table.drop(table_col)
-            conn = self.connection_factory()
-            try:
-                for table in sorted(tables):
-                    self._ensure_table(conn, table, schema_df)
-                conn.commit()
-            finally:
-                conn.close()
+            tables = self._tables(valid)
+            with self._transaction(*tables) as conn:
+                for table in tables:
+                    self._ensure_table(conn, table, stored, pk)
 
         def apply_partition(rows) -> None:
             rows = list(rows)
             if not rows:
                 return
-            conn = factory()
-            try:
-                by_table: dict[str, list] = {}
-                for r in rows:
-                    by_table.setdefault(r[table_col], []).append(r)
+            by_table: dict[str, list] = {}
+            for r in rows:
+                by_table.setdefault(r[table_col], []).append(r)
+            with transaction(factory) as conn:
                 cur = conn.cursor()
                 for table, trows in by_table.items():
-                    upsert = dialect.upsert_sql(table, [*pk, *value_cols], pk)
-                    delete = dialect.delete_sql(table, pk)
-                    ups = [
-                        tuple(r[c] for c in [*pk, *value_cols])
-                        for r in trows
-                        if r[op_col] == OP_UPSERT
-                    ]
-                    dels = [
-                        tuple(r[c] for c in pk) for r in trows if r[op_col] == OP_DELETE
-                    ]
-                    if ups:
-                        cur.executemany(upsert, ups)
-                    if dels:
-                        cur.executemany(delete, dels)
-                conn.commit()
-            except Exception:
-                conn.rollback()
-                raise
-            finally:
-                conn.close()
+                    write_changes(cur, trows, dialect, table, pk, value_cols, op_col)
 
         keys = [table_col] + pk
         if self.num_partitions is not None:
@@ -396,18 +440,21 @@ class CdcApplyEngine:
         shaped.foreachPartition(apply_partition)
 
     # -- DDL (K6/K7) -----------------------------------------------------------
-    def _ensure_table(self, conn, table: str, tdf: DataFrame) -> None:
-        schema_fields = [
-            f for f in tdf.schema.fields if f.name not in (self.op_col,)
-        ]
-        from pyspark.sql import types as T
-
-        schema = T.StructType(schema_fields)
+    def _ensure_table(
+        self,
+        conn,
+        table: str,
+        schema: T.StructType,
+        pk: Sequence[str],
+        evolve: bool = True,
+    ) -> None:
+        """Auto-create ``table`` with the columns of ``schema`` (once per
+        engine — see ``_known_tables``), then auto-evolve it: add the
+        columns the target lacks."""
         cur = conn.cursor()
         if self.auto_create and table not in self._known_tables:
-            cur.execute(self.dialect.create_table_sql(table, schema, self.pk_fields))
-            self._known_tables.add(table)
-        if self.auto_evolve:
+            cur.execute(self.dialect.create_table_sql(table, schema, pk))
+        if evolve and self.auto_evolve:
             existing = self._existing_columns(conn, table)
             if existing is not None:
                 for f in schema.fields:
@@ -427,31 +474,3 @@ class CdcApplyEngine:
             return {self.dialect.normalize_identifier(d[0]) for d in cur.description}
         except Exception:  # noqa: BLE001
             return None
-
-    # -- DML -------------------------------------------------------------------
-    def _write_stream(self, conn, table: str, rows, chunk_size: int = 10_000) -> None:
-        """Batched upserts + deletes from a row iterator, flushed every
-        ``chunk_size``. Keys are unique after last-write-wins dedup, so
-        flush order between the upsert and delete statements is free."""
-        cols = [*self.pk_fields, *self.value_cols]
-        upsert = self.dialect.upsert_sql(table, cols, self.pk_fields)
-        delete = self.dialect.delete_sql(table, self.pk_fields)
-        cur = conn.cursor()
-        ups: list[tuple] = []
-        dels: list[tuple] = []
-        for r in rows:
-            op = r[self.op_col]
-            if op == OP_UPSERT:
-                ups.append(tuple(r[c] for c in cols))
-                if len(ups) >= chunk_size:
-                    cur.executemany(upsert, ups)
-                    ups = []
-            elif op == OP_DELETE:
-                dels.append(tuple(r[c] for c in self.pk_fields))
-                if len(dels) >= chunk_size:
-                    cur.executemany(delete, dels)
-                    dels = []
-        if ups:
-            cur.executemany(upsert, ups)
-        if dels:
-            cur.executemany(delete, dels)

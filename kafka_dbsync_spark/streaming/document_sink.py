@@ -15,24 +15,31 @@ Mirrors the reference's MongoSinkConnector deployment
 No document database exists in this container, so the storage engine is
 any DB-API target holding ``(_id TEXT PRIMARY KEY, doc TEXT)`` — the
 collection's keyed replace/delete semantics are what is being
-engineered and tested; a real MongoDB client plugs in by swapping
-``_write`` (one bulk ReplaceOne/DeleteOne per chunk). Scale shape: one
-LWW dedup shuffle on _id (same as the CDC engine), then a driver-side
+engineered and tested; a real MongoDB client plugs in at the row
+writer (one bulk ReplaceOne/DeleteOne per chunk). Scale shape: one LWW
+dedup shuffle on _id (same as the CDC engine), then a driver-side
 single-writer stream in bounded chunks (the connector's tasks.max=1
 shape).
+
+This sink overrides only the ``_id`` extraction, the tombstone policy
+and the fixed collection DDL; the transaction and the chunked
+replace/delete writer are the CDC engine's (``streaming/apply.py``).
 """
 
 from __future__ import annotations
 
-import logging
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from kafka_dbsync_spark.functions.entrytype import OP_DELETE, OP_UPSERT
 from kafka_dbsync_spark.operators.merge import latest_by_key
+from kafka_dbsync_spark.streaming.apply import transaction, write_changes
+from kafka_dbsync_spark.streaming.dialects import SqliteDialect
 
-log = logging.getLogger(__name__)
+# replace = PostgreSQL-style ON CONFLICT upsert on _id, delete by _id
+_SQL = SqliteDialect()
 
 
 class DocumentApplyEngine:
@@ -70,7 +77,8 @@ class DocumentApplyEngine:
         self.id_field = id_field
         self.tombstones = tombstones
         self.order_col = order_col
-        self._created = False
+        # collections whose CREATE has committed (see ``transaction``)
+        self._known_tables: set[str] = set()
 
     def foreach_batch(self):
         def fn(batch_df: DataFrame, epoch_id: int) -> None:
@@ -93,52 +101,22 @@ class DocumentApplyEngine:
         # cost a second scan of the batch)
         with_id = with_id.filter(F.col("__id").isNotNull())
         deduped = latest_by_key(with_id, ["__id"], [self.order_col])
-        rows = deduped.select("__id", "record_value").toLocalIterator(
-            prefetchPartitions=True
-        )
-        conn = self.connection_factory()
-        try:
-            cur = conn.cursor()
-            created_now = False
-            if not self._created:
-                cur.execute(
+        rows = deduped.select(
+            F.col("__id").alias("_id"),
+            F.col("record_value").alias("doc"),
+            # a null value is reachable only in delete mode
+            F.when(F.col("record_value").isNull(), OP_DELETE)
+            .otherwise(OP_UPSERT)
+            .alias("__op"),
+        ).toLocalIterator(prefetchPartitions=True)
+        with transaction(
+            self.connection_factory, self._known_tables, [self.collection]
+        ) as conn:
+            if self.collection not in self._known_tables:
+                conn.cursor().execute(
                     f'CREATE TABLE IF NOT EXISTS "{self.collection}" '
                     '("_id" TEXT PRIMARY KEY, "doc" TEXT)'
                 )
-                created_now = True
-            self._write(cur, rows)
-            conn.commit()
-            # only after commit: a rollback on a transactional-DDL target
-            # undoes the CREATE, and a pre-set flag would make every
-            # retry fail with "no such table"
-            if created_now:
-                self._created = True
-        except Exception:
-            conn.rollback()
-            raise
-        finally:
-            conn.close()
-
-    def _write(self, cur, rows, chunk_size: int = 10_000) -> None:
-        replace = (
-            f'INSERT INTO "{self.collection}" ("_id", "doc") VALUES (?, ?) '
-            'ON CONFLICT ("_id") DO UPDATE SET "doc" = EXCLUDED."doc"'
-        )
-        delete = f'DELETE FROM "{self.collection}" WHERE "_id" = ?'
-        ups: list[tuple] = []
-        dels: list[tuple] = []
-        for r in rows:
-            if r["record_value"] is None:  # reachable only in delete mode
-                dels.append((r["__id"],))
-                if len(dels) >= chunk_size:
-                    cur.executemany(delete, dels)
-                    dels = []
-            else:
-                ups.append((r["__id"], r["record_value"]))
-                if len(ups) >= chunk_size:
-                    cur.executemany(replace, ups)
-                    ups = []
-        if ups:
-            cur.executemany(replace, ups)
-        if dels:
-            cur.executemany(delete, dels)
+            write_changes(
+                conn.cursor(), rows, _SQL, self.collection, ["_id"], ["doc"], "__op"
+            )

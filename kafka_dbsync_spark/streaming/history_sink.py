@@ -3,7 +3,8 @@
 Where ``CdcApplyEngine`` keeps the *latest* row per key (the reference's
 destructive upsert/delete semantics), this engine keeps *every version*
 with its validity interval — the shape compliance/audit/replication
-users put next to the live target:
+users put next to the live target. It overrides only what a version
+table changes:
 
 - intra-batch versions come from ``operators/history.py::scd2_history``
   (upserts open versions, the next change closes them, deletes close
@@ -14,8 +15,8 @@ users put next to the live target:
   and the closing UPDATE is guarded with ``valid_from < first_change``
   so replaying a batch never closes its own freshly-opened versions.
 
-Driver-side write, same discipline as the base engine (chunked
-``toLocalIterator``, one transaction per table, rollback on failure).
+The dead-letter split, per-table fan-out, transaction, DDL and chunked
+writes are the base engine's (see ``streaming/apply.py``).
 
 Scale notes: the one shuffle is the per-key lead window — the same key
 partitioning as the merge path, so a pipeline feeding both sinks from
@@ -30,7 +31,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from kafka_dbsync_spark.operators.history import scd2_history
-from kafka_dbsync_spark.streaming.apply import CdcApplyEngine
+from kafka_dbsync_spark.streaming.apply import CdcApplyEngine, executemany_chunked
 
 _HISTORY_COLS = ("valid_from", "valid_to", "is_current")
 
@@ -52,53 +53,36 @@ class Scd2ApplyEngine(CdcApplyEngine):
                 "Scd2ApplyEngine writes driver-side; repartition-by-key "
                 "executor write is a straightforward extension"
             )
+        self._order_col()  # a config error fails before any write
+        super().apply_batch(batch_df, epoch_id)
+
+    def _order_col(self) -> str:
         order_cols = self.order_cols or ["offset"]
         if len(order_cols) != 1:
             raise ValueError("history sink needs exactly one order column")
-        order = order_cols[0]
+        return order_cols[0]
 
-        batch_df = batch_df.persist()
-        try:
-            if "error_reason" in batch_df.columns:
-                corrupt = batch_df.filter(F.col("error_reason").isNotNull())
-                valid = batch_df.filter(F.col("error_reason").isNull())
-                self._handle_corrupt(corrupt)
-            else:
-                valid = batch_df
-
-            keyed = valid.select(
-                self.table_col, *self.pk_fields, *self.value_cols,
-                self.op_col, order,
-            )
-            versions = scd2_history(
-                keyed, [self.table_col, *self.pk_fields], order, self.op_col
-            ).select(
-                self.table_col, *self.pk_fields, *self.value_cols,
-                "valid_from", "valid_to",
-                F.col("is_current").cast("int").alias("is_current"),
-            )
-            # first change per (table, key) closes the open version in
-            # the target — min is partial-aggregated map-side
-            closes = valid.groupBy(self.table_col, *self.pk_fields).agg(
-                F.min(order).alias("__close_at")
-            )
-
-            tables = sorted(
-                r[0] for r in
-                valid.select(self.table_col).distinct().collect()
-            )
-            if len(tables) > 1:
-                versions = versions.persist()
-                closes = closes.persist()
-            try:
-                for table in tables:
-                    self._apply_history_table(table, versions, closes)
-            finally:
-                if len(tables) > 1:
-                    versions.unpersist()
-                    closes.unpersist()
-        finally:
-            batch_df.unpersist()
+    def _apply_valid(self, valid: DataFrame) -> None:
+        order = self._order_col()
+        keyed = valid.select(
+            self.table_col, *self.pk_fields, *self.value_cols,
+            self.op_col, order,
+        )
+        versions = scd2_history(
+            keyed, [self.table_col, *self.pk_fields], order, self.op_col
+        ).select(
+            self.table_col, *self.pk_fields, *self.value_cols,
+            "valid_from", "valid_to",
+            F.col("is_current").cast("int").alias("is_current"),
+        )
+        # first change per (table, key) closes the open version in
+        # the target — min is partial-aggregated map-side
+        closes = valid.groupBy(self.table_col, *self.pk_fields).agg(
+            F.min(order).alias("__close_at")
+        )
+        with self._fan_out(valid, versions, closes) as tables:
+            for table in tables:
+                self._apply_history_table(table, versions, closes)
 
     # -- per-table transaction ---------------------------------------------
     def _apply_history_table(
@@ -106,63 +90,28 @@ class Scd2ApplyEngine(CdcApplyEngine):
     ) -> None:
         vdf = versions.filter(F.col(self.table_col) == table).drop(self.table_col)
         cdf = closes.filter(F.col(self.table_col) == table).drop(self.table_col)
-        conn = self.connection_factory()
-        try:
-            self._ensure_history_table(conn, table, vdf)
+        pk = self.pk_fields
+        q, p = self.dialect.quote, self.dialect.placeholder
+        where_pk = " AND ".join(f"{q(c)} = {p}" for c in pk)
+        close_sql = (
+            f"UPDATE {q(table)} SET {q('valid_to')} = {p}, "
+            f"{q('is_current')} = 0 "
+            f"WHERE {where_pk} AND {q('valid_to')} IS NULL "
+            f"AND {q('valid_from')} < {p}"
+        )
+        cols = [*pk, *self.value_cols, *_HISTORY_COLS]
+        version_pk = [*pk, "valid_from"]
+        upsert = self.dialect.upsert_sql(table, cols, version_pk)
+        with self._transaction(table) as conn:
+            self._ensure_table(conn, table, vdf.schema, version_pk)
             cur = conn.cursor()
-            q = self.dialect.quote
             # 1) close open versions for keys changed in this batch
-            where_pk = " AND ".join(f"{q(c)} = ?" for c in self.pk_fields)
-            close_sql = (
-                f"UPDATE {q(table)} SET {q('valid_to')} = ?, "
-                f"{q('is_current')} = 0 "
-                f"WHERE {where_pk} AND {q('valid_to')} IS NULL "
-                f"AND {q('valid_from')} < ?"
-            )
-            chunk: list[tuple] = []
-            for r in cdf.toLocalIterator(prefetchPartitions=True):
-                at = r["__close_at"]
-                chunk.append((at, *[r[c] for c in self.pk_fields], at))
-                if len(chunk) >= 10_000:
-                    cur.executemany(close_sql, chunk)
-                    chunk = []
-            if chunk:
-                cur.executemany(close_sql, chunk)
+            executemany_chunked(cur, close_sql, (
+                (r["__close_at"], *[r[c] for c in pk], r["__close_at"])
+                for r in cdf.toLocalIterator(prefetchPartitions=True)
+            ))
             # 2) upsert version rows (PK = key + valid_from → replay-safe)
-            cols = [*self.pk_fields, *self.value_cols, *_HISTORY_COLS]
-            upsert = self.dialect.upsert_sql(
-                table, cols, [*self.pk_fields, "valid_from"]
-            )
-            chunk = []
-            for r in vdf.toLocalIterator(prefetchPartitions=True):
-                chunk.append(tuple(r[c] for c in cols))
-                if len(chunk) >= 10_000:
-                    cur.executemany(upsert, chunk)
-                    chunk = []
-            if chunk:
-                cur.executemany(upsert, chunk)
-            conn.commit()
-        except Exception:
-            conn.rollback()
-            raise
-        finally:
-            conn.close()
-
-    def _ensure_history_table(self, conn, table: str, vdf: DataFrame) -> None:
-        from pyspark.sql import types as T
-
-        schema = T.StructType([f for f in vdf.schema.fields])
-        cur = conn.cursor()
-        if self.auto_create and table not in self._known_tables:
-            cur.execute(
-                self.dialect.create_table_sql(
-                    table, schema, [*self.pk_fields, "valid_from"]
-                )
-            )
-            self._known_tables.add(table)
-        if self.auto_evolve:
-            existing = self._existing_columns(conn, table)
-            if existing is not None:
-                for f in schema.fields:
-                    if f.name.lower() not in existing:
-                        cur.execute(self.dialect.add_column_sql(table, f))
+            executemany_chunked(cur, upsert, (
+                tuple(r[c] for c in cols)
+                for r in vdf.toLocalIterator(prefetchPartitions=True)
+            ))
