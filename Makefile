@@ -10,7 +10,7 @@ PYSPARK_VERSION ?= $(shell python3 -c "import pyspark; print(pyspark.__version__
 KAFKA_PACKAGE    = org.apache.spark:spark-sql-kafka-0-10_2.13:$(PYSPARK_VERSION)
 COMPOSE          = docker compose -f deployment/kafka/docker-compose.yaml
 
-.PHONY: kafka-up kafka-down kafka-live-test test perfbench-smoke bench
+.PHONY: kafka-up kafka-down kafka-live-test test nightly perfbench-smoke bench
 
 kafka-up:
 	$(COMPOSE) up -d --wait
@@ -28,6 +28,10 @@ kafka-live-test: kafka-up
 test:
 	export SPARK_GRAFT_CPUS="$$(env -u OMP_NUM_THREADS nproc)" SPARK_LOCAL_DIRS=/tmp/spark-local; \
 	timeout -k 10 2670 python -m pytest tests/ -q --continue-on-collection-errors -p no:cacheprovider
+
+# the nightly tier that pytest.ini deselects by default
+nightly:
+	python -m pytest tests/ -m nightly -q -p no:cacheprovider
 
 # the CDC benchmark's own tests, at smoke size
 perfbench-smoke:

@@ -259,9 +259,10 @@ def hll_ingest_foreach_batch(
     """
 
     def fn(batch_df: DataFrame, epoch_id: int) -> None:
-        import json
         import os
         import shutil
+
+        from kafka_dbsync_spark.operators.epoch_log import write_marker
 
         spark = batch_df.sparkSession
         os.makedirs(state_dir, exist_ok=True)
@@ -278,10 +279,10 @@ def hll_ingest_foreach_batch(
             new = hll_merge_registers(prev, new, group_cols)
         out = os.path.join(state_dir, f"registers_v{ver}.parquet")
         new.write.mode("overwrite").parquet(out)
-        tmp = _state_manifest(state_dir) + ".tmp"
-        with open(tmp, "w") as fh:
-            json.dump({"version": ver, "p": p, "last_epoch": int(epoch_id)}, fh)
-        os.replace(tmp, _state_manifest(state_dir))
+        write_marker(
+            _state_manifest(state_dir),
+            {"version": ver, "p": p, "last_epoch": int(epoch_id)},
+        )
         # retire superseded versions (state stays 1 table)
         for name in os.listdir(state_dir):
             if (

@@ -177,50 +177,6 @@ def quality_score(c: Column | str) -> Column:
     )
 
 
-def top_bigram(toks_col: Column) -> tuple[Column, Column]:
-    """(count, gram) of the most frequent word 2-gram in a MATERIALIZED
-    token array column (ties broken toward the lexicographically largest
-    gram, so the result is deterministic and engine-portable).
-
-    Single O(n log n) pass: sort the gram array, then fold it counting
-    runs with a struct accumulator — no per-distinct-gram rescan (the
-    naive transform(distinct, g -> count) is O(n²) per doc) and no
-    explode/shuffle.
-    """
-    grams = F.when(
-        F.size(toks_col) >= 2,
-        F.transform(
-            F.sequence(F.lit(0), F.size(toks_col) - 2),
-            lambda i: F.concat_ws(
-                " ",
-                F.element_at(toks_col, (i + 1).cast("int")),
-                F.element_at(toks_col, (i + 2).cast("int")),
-            ),
-        ),
-    ).otherwise(F.array().cast("array<string>"))
-    init = F.struct(
-        F.lit("").alias("prev"),
-        F.lit(0).cast("long").alias("run"),
-        F.lit(0).cast("long").alias("best"),
-        F.lit("").alias("bg"),
-    )
-
-    def step(acc, g):
-        new_run = F.when(g == acc["prev"], acc["run"] + 1).otherwise(
-            F.lit(1).cast("long")
-        )
-        upd = (new_run > acc["best"]) | ((new_run == acc["best"]) & (g > acc["bg"]))
-        return F.struct(
-            g.alias("prev"),
-            new_run.alias("run"),
-            F.when(upd, new_run).otherwise(acc["best"]).alias("best"),
-            F.when(upd, g).otherwise(acc["bg"]).alias("bg"),
-        )
-
-    r = F.aggregate(F.array_sort(grams), init, step)
-    return r["best"], r["bg"]
-
-
 def _repetition_batch(toks_series, chars_series, stopwords=None):
     """Vectorized core of :func:`repetition_metrics` for one Arrow
     batch: identical arithmetic to the JVM expression tree it replaced

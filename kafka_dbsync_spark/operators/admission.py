@@ -23,33 +23,12 @@ State layout under ``state_dir``::
     rejected/e{epoch}/          batch rows + ppl + reject_reason
     duplicates/e{epoch}/        batch rows + dup_reason
 
-The seed lives under a RESERVED ``seed/`` name, not an epoch id:
-Structured Streaming's first batchId is 0, so a seed written as
-``e0`` would make the operator silently no-op micro-batch 0 via the
-replayed-epoch guard (r6 advice #1). ``seed/`` sorts outside the
-epoch namespace and is always visible to the membership check.
-
-Replay/crash contract: all four writes are deterministic
-``overwrite``s into epoch dirs, and ``admitted_hashes`` lands LAST —
-the epoch's commit point. A redelivered epoch whose hash dir is
-committed returns without work; a crash mid-epoch leaves the hash dir
-missing, so the replay rewrites every output dir identically. The
-membership check reads only hash dirs of EARLIER epochs (committed or
-not-yet-written ones are excluded by construction since epoch ids are
-monotone), so a replay computes against exactly the state the first
-attempt saw.
-
-Compaction (VERDICT r6 #4 — per-epoch dirs otherwise accumulate
-forever, O(epochs) listings + small files per batch):
-:func:`compact_admission_state` folds seed + committed epochs into one
-``base-{T}`` snapshot per state table, commit-last (write the new
-base, THEN drop the folded dirs), so per-batch state reads are O(1)
-dirs regardless of stream age. An epoch at or below the newest base's
-``T`` counts as committed (its own dir is gone), so replays across a
-compaction boundary stay no-ops. ``state_dir`` is bound to ONE
-checkpoint: a new checkpoint restarts batchIds at 0, and those epochs
-would be swallowed by the committed/compacted guards — point a new
-stream at a fresh state_dir (seed it from the old state if needed).
+Epoch dirs, the ``_SUCCESS`` commit, replay, the reserved ``seed/``
+and ``base-{T}`` compaction follow the protocol in
+``operators/epoch_log.py``. Here ``admitted_hashes`` is the commit
+table: it lands LAST, after the other three deterministic overwrites.
+The membership check reads only hash dirs of EARLIER epochs, so a
+replay computes against exactly the state the first attempt saw.
 
 Scale: admitted-set membership is an md5-key anti-join (hashes only —
 KBs per million docs, never corpus text); scoring is the frozen
@@ -70,97 +49,21 @@ from collections.abc import Callable
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from kafka_dbsync_spark.operators.lm_index import lm_score
+from kafka_dbsync_spark.operators.epoch_log import (
+    _SEED,
+    _epoch_is_committed,
+    _read_state,
+    _scan_root,
+    compact,
+    epoch_dir,
+    route_epoch,
+)
+from kafka_dbsync_spark.operators.lm_index import _ppl_gate, lm_score
 
 _HASHES = "admitted_hashes"
 _ACCEPTED = "accepted"
 _REJECTED = "rejected"
 _DUPLICATES = "duplicates"
-
-
-_SEED = "seed"
-
-
-def _committed(d: str) -> bool:
-    return os.path.exists(os.path.join(d, "_SUCCESS"))
-
-
-def _scan_root(state_dir: str, sub: str):
-    """Inventory one state table's dirs. Returns ``(base_dir,
-    base_through, seed_dir, committed_epochs, pending_epochs)`` where
-    ``committed_epochs`` is ``[(epoch, dir), ...]`` and
-    ``pending_epochs`` lists epoch ids whose dir exists uncommitted
-    (crash mid-write). ``base_through = -1`` when no base exists."""
-    root = os.path.join(state_dir, sub)
-    base_dir, base_through = None, -1
-    seed_dir = None
-    committed: list[tuple[int, str]] = []
-    pending: list[int] = []
-    if not os.path.isdir(root):
-        return base_dir, base_through, seed_dir, committed, pending
-    for name in sorted(os.listdir(root)):
-        d = os.path.join(root, name)
-        if name == _SEED:
-            if _committed(d):
-                seed_dir = d
-        elif name.startswith("base-"):
-            try:
-                through = int(name[5:])
-            except ValueError:
-                continue
-            if _committed(d) and through > base_through:
-                base_dir, base_through = d, through
-        elif name.startswith("e"):
-            try:
-                epoch = int(name[1:])
-            except ValueError:
-                continue
-            if _committed(d):
-                committed.append((epoch, d))
-            else:
-                pending.append(epoch)
-    return base_dir, base_through, seed_dir, committed, pending
-
-
-def _epoch_dirs(state_dir: str, sub: str, before_epoch: int | None = None):
-    """Visible state dirs for one table: the newest base snapshot (which
-    covers the seed and every epoch <= its T), else the seed, plus
-    committed epoch dirs above the base, optionally only those earlier
-    than ``before_epoch`` (replay isolation; callers never pass a
-    ``before_epoch`` at or below the base's T — such an epoch is
-    treated as committed and short-circuits before reading state)."""
-    base_dir, through, seed_dir, committed, _ = _scan_root(state_dir, sub)
-    out = []
-    if base_dir is not None:
-        out.append(base_dir)
-    elif seed_dir is not None:
-        out.append(seed_dir)
-    for epoch, d in sorted(committed):
-        if epoch <= through:
-            continue  # folded into the base (dir awaiting cleanup)
-        if before_epoch is not None and epoch >= before_epoch:
-            continue
-        out.append(d)
-    return out
-
-
-def _epoch_is_committed(state_dir: str, epoch: int) -> bool:
-    """True when this epoch's hashes landed — directly, or folded into
-    a base snapshot by compaction (the dir itself is gone then)."""
-    if _committed(os.path.join(state_dir, _HASHES, f"e{epoch}")):
-        return True
-    _, through, _, _, _ = _scan_root(state_dir, _HASHES)
-    return epoch <= through
-
-
-def _read_state(
-    spark: SparkSession, state_dir: str, sub: str,
-    before_epoch: int | None = None,
-) -> DataFrame | None:
-    dirs = _epoch_dirs(state_dir, sub, before_epoch)
-    if not dirs:
-        return None
-    return spark.read.parquet(*dirs)
 
 
 def read_admitted(spark: SparkSession, state_dir: str) -> DataFrame | None:
@@ -186,88 +89,15 @@ def compact_admission_state(
 ) -> dict:
     """Fold the seed and committed epoch dirs into ONE ``base-{T}``
     snapshot per state table (VERDICT r6 #4), bounding per-batch state
-    reads to O(1) dirs on an arbitrarily old stream. ``keep_last``
-    leaves that many newest committed epochs unfolded (cheap replay of
-    recent batches keeps their own dirs).
-
-    Protocol, per table, commit-last: write ``base-{T}`` (atomic via
-    ``_SUCCESS``), then delete the dirs it folded (old base, seed,
-    epochs <= T). A crash between the two leaves both visible, which
-    is harmless: ``_epoch_dirs`` reads the newest base plus only
-    epochs ABOVE its T, so nothing is double-counted, and the next
-    compaction cleans the leftovers. T never crosses an uncommitted
-    (crashed mid-write) epoch dir — folding past it would make its
-    replay a no-op and lose the batch.
-
-    Returns ``{"through": T, "folded_epochs": n}`` (``n == 0`` when
-    nothing qualified)."""
-    import shutil
-
-    _, through, _, committed, pending = _scan_root(state_dir, _HASHES)
-    ceiling = min(pending) if pending else None
-    cand = sorted(
-        e for e, _ in committed
-        if e > through and (ceiling is None or e < ceiling)
+    reads to O(1) dirs on an arbitrarily old stream; ``keep_last``
+    leaves that many newest committed epochs unfolded. Protocol and
+    crash argument: ``epoch_log.compact``. Returns ``{"through": T,
+    "folded_epochs": n}`` (``n == 0`` when nothing qualified)."""
+    return compact(
+        spark, state_dir, _HASHES,
+        (_HASHES, _ACCEPTED, _REJECTED, _DUPLICATES),
+        {_HASHES: lambda df: df.distinct()}, keep_last,
     )
-    if keep_last > 0:
-        cand = cand[: max(0, len(cand) - keep_last)]
-    if not cand:
-        return {"through": through, "folded_epochs": 0}
-    new_through = cand[-1]
-    _fold_tables(
-        spark, state_dir, (_HASHES, _ACCEPTED, _REJECTED, _DUPLICATES),
-        new_through, {_HASHES: lambda df: df.distinct()},
-    )
-    return {"through": new_through, "folded_epochs": len(cand)}
-
-
-def _fold_tables(
-    spark: SparkSession,
-    state_dir: str,
-    subs: tuple[str, ...],
-    new_through: int,
-    transforms: dict | None = None,
-) -> None:
-    """Fold each table's visible dirs at or below ``new_through`` into
-    ``base-{new_through}`` (per-sub optional transform, e.g. distinct
-    for hash sets, re-aggregation for counters), then retire the
-    covered dirs — the shared write-base-then-clean step of every
-    compaction here."""
-    import shutil
-
-    for sub in subs:
-        base_dir, sub_through, seed_dir, sub_committed, _ = _scan_root(
-            state_dir, sub
-        )
-        srcs = [d for d in (base_dir, seed_dir) if d is not None]
-        srcs += [
-            d for e, d in sorted(sub_committed)
-            if sub_through < e <= new_through
-        ]
-        if not srcs:
-            continue
-        root = os.path.join(state_dir, sub)
-        df = spark.read.parquet(*srcs)
-        fn = (transforms or {}).get(sub)
-        if fn is not None:
-            df = fn(df)
-        df.write.mode("overwrite").parquet(
-            os.path.join(root, f"base-{new_through}")
-        )
-        # commit point passed: retire everything the new base covers
-        for name in list(os.listdir(root)):
-            d = os.path.join(root, name)
-            if name == _SEED or (
-                name.startswith("base-") and name != f"base-{new_through}"
-            ):
-                shutil.rmtree(d, ignore_errors=True)
-            elif name.startswith("e"):
-                try:
-                    epoch = int(name[1:])
-                except ValueError:
-                    continue
-                if epoch <= new_through and _committed(d):
-                    shutil.rmtree(d, ignore_errors=True)
 
 
 def admission_foreach_batch(
@@ -301,15 +131,12 @@ def admission_foreach_batch(
     multiple of this, fold the accumulated epoch dirs into a base
     snapshot (``compact_admission_state`` with ``keep_last=1``), so a
     long-running stream's per-batch state reads stay O(1) dirs without
-    an external maintenance job. Compaction after the commit point is
-    crash-safe by the same argument as the manual call. ``None``
-    disables (call ``compact_admission_state`` yourself)."""
+    an external maintenance job. ``None`` disables (call ``compact_admission_state`` yourself)."""
 
     def fn(batch_df: DataFrame, epoch_id: int) -> None:
         spark = batch_df.sparkSession
         epoch = int(epoch_id)
-        commit = os.path.join(state_dir, _HASHES, f"e{epoch}")
-        if _epoch_is_committed(state_dir, epoch):
+        if _epoch_is_committed(state_dir, _HASHES, epoch):
             return  # replayed epoch: committed directly or compacted away
         key = (key_fn or (lambda df: F.md5(F.col(text_col))))(batch_df)
         from pyspark.sql.window import Window as W
@@ -339,7 +166,7 @@ def admission_foreach_batch(
                     .withColumn("dup_reason", dup_reason)
                     .drop("__first", "dh")
                     .write.mode("overwrite")
-                    .parquet(os.path.join(state_dir, _DUPLICATES, f"e{epoch}"))
+                    .parquet(epoch_dir(state_dir, _DUPLICATES, epoch))
                 )
                 scored = fresh.join(
                     lm_score(spark, model_path, fresh, id_col, text_col),
@@ -347,32 +174,19 @@ def admission_foreach_batch(
                     "left",
                 ).drop("n_bigrams").persist()
                 try:
-                    (
-                        scored.filter(F.col("ppl") <= max_ppl)
-                        .drop("dh")
-                        .write.mode("overwrite")
-                        .parquet(os.path.join(state_dir, _ACCEPTED, f"e{epoch}"))
-                    )
-                    (
-                        scored.filter(
-                            (F.col("ppl") > max_ppl) | F.col("ppl").isNull()
-                        )
-                        .withColumn(
-                            "reject_reason",
-                            F.when(
-                                F.col("ppl").isNull(), F.lit("too_short")
-                            ).otherwise(F.lit("high_perplexity")),
-                        )
-                        .drop("dh")
-                        .write.mode("overwrite")
-                        .parquet(os.path.join(state_dir, _REJECTED, f"e{epoch}"))
+                    route_epoch(
+                        scored,
+                        epoch_dir(state_dir, _ACCEPTED, epoch),
+                        epoch_dir(state_dir, _REJECTED, epoch),
+                        *_ppl_gate(max_ppl),
+                        drop=("dh",),
                     )
                     # commit point: every FRESH key joins the admitted
                     # set (quality-rejected included — the first holder
                     # owns the hash)
                     fresh.select("dh").distinct().write.mode(
                         "overwrite"
-                    ).parquet(commit)
+                    ).parquet(epoch_dir(state_dir, _HASHES, epoch))
                 finally:
                     scored.unpersist()
             finally:
@@ -430,24 +244,18 @@ def budget_admission_foreach_batch(
     4. commit the epoch by writing the per-group admitted-weight
        partial to ``spent/`` LAST.
 
-    Replay/crash contract is the admission operator's: outputs are
-    deterministic overwrites into epoch dirs, ``spent`` is the commit
-    point, a committed (or compacted-away) epoch no-ops, and the
-    counter read isolates to earlier epochs so replays see exactly the
-    state the first attempt saw. ``compact_every`` folds the epoch
-    dirs into per-table base snapshots (spent partials re-aggregate to
-    one row per group)."""
+    Replay, crash and compaction follow ``operators/epoch_log.py``
+    with ``spent`` as the commit table; the counter read isolates to
+    earlier epochs. ``compact_every`` folds the epoch dirs into
+    per-table base snapshots (spent partials re-aggregate to one row
+    per group)."""
     from pyspark.sql.window import Window as W
 
     def fn(batch_df: DataFrame, epoch_id: int) -> None:
         spark = batch_df.sparkSession
         epoch = int(epoch_id)
-        commit = os.path.join(state_dir, _SPENT, f"e{epoch}")
-        if _committed(commit):
-            return
-        _, through, _, _, _ = _scan_root(state_dir, _SPENT)
-        if epoch <= through:
-            return  # compacted away: already committed
+        if _epoch_is_committed(state_dir, _SPENT, epoch):
+            return  # replayed epoch: committed directly or compacted away
         prior = _read_state(spark, state_dir, _SPENT, before_epoch=epoch)
         if prior is None:
             spent = None
@@ -472,21 +280,21 @@ def budget_admission_foreach_batch(
             (
                 admitted.drop("__cum", "__spent", "__before")
                 .write.mode("overwrite")
-                .parquet(os.path.join(state_dir, _ADMITTED, f"e{epoch}"))
+                .parquet(epoch_dir(state_dir, _ADMITTED, epoch))
             )
             (
                 ranked.filter(F.col("__before") >= budget)
                 .withColumnRenamed("__before", "spent_before")
                 .drop("__cum", "__spent")
                 .write.mode("overwrite")
-                .parquet(os.path.join(state_dir, _DEFERRED, f"e{epoch}"))
+                .parquet(epoch_dir(state_dir, _DEFERRED, epoch))
             )
             # commit point: this epoch's per-group admitted weight
             (
                 admitted.groupBy(group_col)
                 .agg(F.sum(F.col(weight_col)).cast("long").alias("w"))
                 .write.mode("overwrite")
-                .parquet(commit)
+                .parquet(epoch_dir(state_dir, _SPENT, epoch))
             )
         finally:
             ranked.unpersist()
@@ -502,27 +310,15 @@ def compact_budget_state(
     group_col: str,
     keep_last: int = 0,
 ) -> dict:
-    """Fold the budget-admission state (same protocol as
-    :func:`compact_admission_state`; the ``spent`` partials
-    re-aggregate to one row per group in the base)."""
-    _, through, _, committed, pending = _scan_root(state_dir, _SPENT)
-    ceiling = min(pending) if pending else None
-    cand = sorted(
-        e for e, _ in committed
-        if e > through and (ceiling is None or e < ceiling)
-    )
-    if keep_last > 0:
-        cand = cand[: max(0, len(cand) - keep_last)]
-    if not cand:
-        return {"through": through, "folded_epochs": 0}
-    new_through = cand[-1]
-    _fold_tables(
-        spark, state_dir, (_SPENT, _ADMITTED, _DEFERRED), new_through,
+    """Fold the budget-admission state by ``epoch_log.compact``; the
+    ``spent`` partials re-aggregate to one row per group in the base."""
+    return compact(
+        spark, state_dir, _SPENT, (_SPENT, _ADMITTED, _DEFERRED),
         {_SPENT: lambda df: df.groupBy(group_col).agg(
             F.sum("w").cast("long").alias("w")
         )},
+        keep_last,
     )
-    return {"through": new_through, "folded_epochs": len(cand)}
 
 
 # ---------------------------------------------------------------------------
@@ -604,10 +400,8 @@ def paragraph_ingest_foreach_batch(
     Every doc lands REWRITTEN in ``cleaned/e{epoch}`` (survivor
     paragraphs re-joined with ``sep``; untouched docs pass through
     whole), and the batch's NEW hashes commit LAST to
-    ``para_hashes/e{epoch}`` — the epoch's commit point, so a replay
-    recomputes against exactly the state the first attempt saw and
-    rewrites every output identically (the admission_foreach_batch
-    contract). Empty-normalized paragraphs are formatting: kept
+    ``para_hashes/e{epoch}``, the commit table of the
+    ``operators/epoch_log.py`` protocol. Empty-normalized paragraphs are formatting: kept
     verbatim, never hashed (the would-be hottest key).
 
     Batch equivalence: when batches partition the corpus in (id)
@@ -629,12 +423,8 @@ def paragraph_ingest_foreach_batch(
     def fn(batch_df: DataFrame, epoch_id: int) -> None:
         spark = batch_df.sparkSession
         epoch = int(epoch_id)
-        commit = os.path.join(state_dir, _PARA_HASHES, f"e{epoch}")
-        if _committed(commit):
-            return
-        _, through, _, _, _ = _scan_root(state_dir, _PARA_HASHES)
-        if epoch <= through:
-            return  # folded into a base snapshot by compaction
+        if _epoch_is_committed(state_dir, _PARA_HASHES, epoch):
+            return  # replayed epoch: committed directly or compacted away
         d = batch_df.select(
             id_col, F.split(F.col(text_col), sep_re).alias("paras")
         ).persist()
@@ -698,11 +488,13 @@ def paragraph_ingest_foreach_batch(
                         F.array_join(kept, sep).alias("cleaned_text"),
                     )
                     .write.mode("overwrite")
-                    .parquet(os.path.join(state_dir, _CLEANED, f"e{epoch}"))
+                    .parquet(epoch_dir(state_dir, _CLEANED, epoch))
                 )
                 # commit point: the batch's NEW hashes join the seen set
                 j.filter(F.col("__old").isNull()).select("dh").distinct(
-                ).write.mode("overwrite").parquet(commit)
+                ).write.mode("overwrite").parquet(
+                    epoch_dir(state_dir, _PARA_HASHES, epoch)
+                )
             finally:
                 j.unpersist()
         finally:
@@ -779,9 +571,10 @@ def neardup_ingest_foreach_batch(
 
     Admitted rows land whole (blob included) in ``accepted/e{epoch}``
     with their fingerprint; dropped rows log (id, fp, dup_reason) in
-    ``duplicates/e{epoch}`` — never their blobs. Replay/crash contract
-    and ``seed/``/compaction semantics are ``admission_foreach_batch``'s,
-    over hash-only state (7 bytes of entropy per image ever seen).
+    ``duplicates/e{epoch}`` — never their blobs. Replay, ``seed/`` and
+    compaction follow ``operators/epoch_log.py`` with ``fingerprints``
+    as the commit table: hash-only state (7 bytes of entropy per image
+    ever seen).
 
     At scale: the state side is the big side — the batch's banded
     fingerprints broadcast into one hash join against it (band_idx
@@ -791,12 +584,8 @@ def neardup_ingest_foreach_batch(
     def fn(batch_df: DataFrame, epoch_id: int) -> None:
         spark = batch_df.sparkSession
         epoch = int(epoch_id)
-        commit = os.path.join(state_dir, _FPRINTS, f"e{epoch}")
-        if _committed(commit):
-            return
-        _, through, _, _, _ = _scan_root(state_dir, _FPRINTS)
-        if epoch <= through:
-            return  # folded into a base snapshot by compaction
+        if _epoch_is_committed(state_dir, _FPRINTS, epoch):
+            return  # replayed epoch: committed directly or compacted away
         hashes = (
             hash_fn(batch_df)
             .select(id_col, F.col(hash_col).alias("fp"))
@@ -862,19 +651,19 @@ def neardup_ingest_foreach_batch(
                     hashes.join(dominated, id_col)
                     .select(id_col, "fp", "dup_reason")
                     .write.mode("overwrite")
-                    .parquet(os.path.join(state_dir, _DUPLICATES, f"e{epoch}"))
+                    .parquet(epoch_dir(state_dir, _DUPLICATES, epoch))
                 )
                 (
                     batch_df.join(hashes, id_col)
                     .join(dominated.select(id_col), id_col, "left_anti")
                     .write.mode("overwrite")
-                    .parquet(os.path.join(state_dir, _ACCEPTED, f"e{epoch}"))
+                    .parquet(epoch_dir(state_dir, _ACCEPTED, epoch))
                 )
                 # commit point: EVERY arriving fingerprint joins the
                 # seen set, admitted or not
                 hashes.select("fp").distinct().write.mode(
                     "overwrite"
-                ).parquet(commit)
+                ).parquet(epoch_dir(state_dir, _FPRINTS, epoch))
             finally:
                 dominated.unpersist()
         finally:
@@ -890,46 +679,20 @@ def compact_fingerprint_state(
 ) -> dict:
     """Fold seed + committed fingerprint-ingest epochs into one
     ``base-{T}`` per table (fingerprints distinct, accepted/duplicates
-    as-is) — the same commit-last protocol and crash argument as
-    ``compact_admission_state``."""
-    _, through, _, committed, pending = _scan_root(state_dir, _FPRINTS)
-    ceiling = min(pending) if pending else None
-    cand = sorted(
-        e for e, _ in committed
-        if e > through and (ceiling is None or e < ceiling)
+    as-is), by ``epoch_log.compact``."""
+    return compact(
+        spark, state_dir, _FPRINTS, (_FPRINTS, _ACCEPTED, _DUPLICATES),
+        {_FPRINTS: lambda df: df.distinct()}, keep_last,
     )
-    if keep_last > 0:
-        cand = cand[: max(0, len(cand) - keep_last)]
-    if not cand:
-        return {"through": through, "folded_epochs": 0}
-    new_through = cand[-1]
-    _fold_tables(
-        spark, state_dir, (_FPRINTS, _ACCEPTED, _DUPLICATES), new_through,
-        {_FPRINTS: lambda df: df.distinct()},
-    )
-    return {"through": new_through, "folded_epochs": len(cand)}
 
 
 def compact_paragraph_state(
     spark: SparkSession, state_dir: str, keep_last: int = 0
 ) -> dict:
     """Fold seed + committed paragraph-ingest epochs into one
-    ``base-{T}`` per table (hashes distinct, cleaned rows as-is) —
-    the same commit-last protocol and crash argument as
-    ``compact_admission_state``."""
-    _, through, _, committed, pending = _scan_root(state_dir, _PARA_HASHES)
-    ceiling = min(pending) if pending else None
-    cand = sorted(
-        e for e, _ in committed
-        if e > through and (ceiling is None or e < ceiling)
+    ``base-{T}`` per table (hashes distinct, cleaned rows as-is), by
+    ``epoch_log.compact``."""
+    return compact(
+        spark, state_dir, _PARA_HASHES, (_PARA_HASHES, _CLEANED),
+        {_PARA_HASHES: lambda df: df.distinct()}, keep_last,
     )
-    if keep_last > 0:
-        cand = cand[: max(0, len(cand) - keep_last)]
-    if not cand:
-        return {"through": through, "folded_epochs": 0}
-    new_through = cand[-1]
-    _fold_tables(
-        spark, state_dir, (_PARA_HASHES, _CLEANED), new_through,
-        {_PARA_HASHES: lambda df: df.distinct()},
-    )
-    return {"through": new_through, "folded_epochs": len(cand)}

@@ -97,6 +97,14 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from kafka_dbsync_spark.functions.text import normalize_text
+from kafka_dbsync_spark.operators.epoch_log import (
+    _INGEST,
+    _ingest_committed,
+    commit,
+    epoch_dir,
+    read_marker,
+    write_marker,
+)
 from kafka_dbsync_spark.operators.id_digest import (
     DIGEST_SUSPECT_CAP,
     attach_bloom,
@@ -799,10 +807,6 @@ def bm25_index_add(
     (:func:`_check_add_schemas`, ADVICE r10) — every live segment must
     satisfy the single marker-level schema or schema-explicit reads
     would fail at serve/merge time, far from the add that caused it."""
-    import shutil
-
-    from kafka_dbsync_spark.operators.cache_validation import invalidate_memo
-
     meta = _live_meta(path)
     shard_fp = corpus_fingerprint(shard, id_col, text_col)
     seg = "seg" + _gen_name(shard_fp)[3:] + f"_v{FORMAT}"
@@ -824,10 +828,25 @@ def bm25_index_add(
             "segment doc sets must be disjoint (dedup or re-id the "
             "shard before adding)"
         )
-    stage = os.path.join(path, f".stage-{seg}-{os.getpid()}")
+    _publish_segment(path, meta, seg, write_stage, shard_fp, n, sumdl, seg_digest)
+
+
+def _publish_segment(
+    path: str, meta: dict, seg: str, write_stage, shard_fp: dict,
+    n: int, sumdl: int, seg_digest,
+) -> None:
+    """Land one new immutable segment and flip the marker to list it:
+    stage + rename (a rename loser discards its identical copy), then
+    fold the segment's stats, digest and fingerprint into the marker
+    LAST."""
+    import shutil
+
+    from kafka_dbsync_spark.operators.cache_validation import invalidate_memo
+
     final_dir = os.path.join(path, seg)
     invalidate_memo(path)
     if not os.path.exists(final_dir):
+        stage = os.path.join(path, f".stage-{seg}-{os.getpid()}")
         write_stage(stage)
         try:
             os.rename(stage, final_dir)
@@ -849,30 +868,7 @@ def bm25_index_add(
     # any single source directory, so staleness falls back to the
     # exact fingerprint tier
     rec.pop("src_sig", None)
-    tmp = os.path.join(path, _MARKER + f".tmp.{os.getpid()}")
-    with open(tmp, "w") as f:
-        json.dump(rec, f)
-    os.replace(tmp, os.path.join(path, _MARKER))
-
-
-def _flip_marker(path: str, rec: dict) -> None:
-    tmp = os.path.join(path, _MARKER + f".tmp.{os.getpid()}")
-    with open(tmp, "w") as f:
-        json.dump(rec, f)
-    os.replace(tmp, os.path.join(path, _MARKER))
-
-
-def _ingest_committed(path: str, epoch: int) -> bool:
-    return os.path.exists(
-        os.path.join(path, "ingest", f"e{epoch}", "_SUCCESS")
-    )
-
-
-def _commit_ingest(path: str, epoch: int) -> None:
-    commit_dir = os.path.join(path, "ingest", f"e{epoch}")
-    os.makedirs(commit_dir, exist_ok=True)
-    with open(os.path.join(commit_dir, "_SUCCESS"), "w") as f:
-        f.write("")
+    write_marker(os.path.join(path, _MARKER), rec)
 
 
 def bm25_ingest_foreach_batch(
@@ -887,8 +883,9 @@ def bm25_ingest_foreach_batch(
     Streaming perfectly: one immutable SEGMENT per micro-batch epoch,
     under the ann_ingest_stream discipline. Per batch:
 
-    1. committed-epoch guard (``ingest/e{N}/_SUCCESS``) — a replayed
-       epoch returns without work;
+    1. committed-epoch guard (``ingest/e{N}``, the
+       ``operators/epoch_log.py`` commit) — a replayed epoch returns
+       without work;
     2. marker guard — a crash between the marker flip and the commit
        leaves the epoch's segment live in the marker: the replay finds
        ``eseg{N}`` in the segment list and only re-commits;
@@ -913,9 +910,6 @@ def bm25_ingest_foreach_batch(
     (:func:`_check_add_schemas`). Single writer, as for every index
     mutation (the module's Lucene IndexWriter contract).
     """
-    import shutil
-
-    from kafka_dbsync_spark.operators.cache_validation import invalidate_memo
 
     def fn(batch_df: DataFrame, epoch_id: int) -> None:
         spark = batch_df.sparkSession
@@ -925,7 +919,7 @@ def bm25_ingest_foreach_batch(
         meta = _live_meta(path, "BM25 streaming-ingest target")
         seg = f"eseg{epoch}_v{FORMAT}"
         if seg in meta["segments"]:
-            _commit_ingest(path, epoch)  # crash window 5->commit: no-op
+            commit(epoch_dir(path, _INGEST, epoch))  # crash window 5->commit
             return
         # keep-first admission, metadata-first (VERDICT r11 #1): one
         # batch-sized digest job replaces the index-sized doclens union
@@ -976,36 +970,13 @@ def bm25_ingest_foreach_batch(
             spark, fresh, id_col, text_col
         )
         _check_add_schemas(meta, schemas, path)
-        if n == 0:
-            _commit_ingest(path, epoch)  # nothing fresh arrived
-            return
-        shard_fp = corpus_fingerprint(fresh, id_col, text_col)
-        final_dir = os.path.join(path, seg)
-        invalidate_memo(path)
-        if not os.path.exists(final_dir):
-            stage = os.path.join(path, f".stage-{seg}-{os.getpid()}")
-            write_stage(stage)
-            try:
-                os.rename(stage, final_dir)
-            except OSError:
-                shutil.rmtree(stage, ignore_errors=True)
-        rec = dict(
-            meta,
-            fingerprint=_combine_fp(meta["fingerprint"], shard_fp),
-            n=meta["n"] + n,
-            sumdl=meta["sumdl"] + sumdl,
-            segments=meta["segments"] + [seg],
-            segstats={**meta.get("segstats", {}), seg: [n, sumdl]},
-            segdigests={
-                **meta.get("segdigests", {}),
-                seg: seg_digest
-                if seg_digest is not None
-                else _UNKNOWN_DIGEST,
-            },
-        )
-        rec.pop("src_sig", None)
-        _flip_marker(path, rec)
-        _commit_ingest(path, epoch)
+        if n > 0:  # else nothing fresh arrived: commit with no segment
+            _publish_segment(
+                path, meta, seg, write_stage,
+                corpus_fingerprint(fresh, id_col, text_col), n, sumdl,
+                seg_digest,
+            )
+        commit(epoch_dir(path, _INGEST, epoch))
 
     return fn
 
@@ -1070,10 +1041,7 @@ def bm25_index_remove(
         removed_n=meta.get("removed_n", 0) + len(new),
         removed_sumdl=meta.get("removed_sumdl", 0) + sum(found.values()),
     )
-    tmp = os.path.join(path, _MARKER + f".tmp.{os.getpid()}")
-    with open(tmp, "w") as f:
-        json.dump(rec, f)
-    os.replace(tmp, os.path.join(path, _MARKER))
+    write_marker(os.path.join(path, _MARKER), rec)
     return {"removed": len(new), "already": len(already)}
 
 
@@ -1294,10 +1262,7 @@ def bm25_segment_merge(
         # long-running ingest + tiered-merge scenario.
         if meta.get("gen") in set(segs):
             rec["gen"] = merged
-    tmp = os.path.join(path, _MARKER + f".tmp.{os.getpid()}")
-    with open(tmp, "w") as f:
-        json.dump(rec, f)
-    os.replace(tmp, os.path.join(path, _MARKER))
+    write_marker(os.path.join(path, _MARKER), rec)
     # Deferred retirement (ADVICE r10): a reader that resolved the
     # marker just BEFORE this flip still holds lazy DataFrames over the
     # retiring dirs, so deleting them here would yank parquet out from
@@ -1402,7 +1367,7 @@ def _segment_sizes(
             digs[s] = d
         meta["segstats"] = stats
         meta["segdigests"] = digs
-        _flip_marker(path, dict(meta))
+        write_marker(os.path.join(path, _MARKER), meta)
         invalidate_memo(path)
     return {s: int(stats[s][0]) for s in meta["segments"]}
 
@@ -1424,11 +1389,7 @@ def bm25_index_is_current(
     stale regardless of fingerprint, so callers rebuild instead of
     reading a layout this code can't serve (e.g. pre-positional
     postings)."""
-    try:
-        with open(os.path.join(path, _MARKER)) as f:
-            if json.load(f).get("format") != FORMAT:
-                return False
-    except (OSError, ValueError):
+    if (read_marker(os.path.join(path, _MARKER)) or {}).get("format") != FORMAT:
         return False
     return lm_model_is_current(
         docs,

@@ -38,6 +38,7 @@ from kafka_dbsync_spark.operators.corpus import (
     benchmark_grams,
     contamination_stats_against,
 )
+from kafka_dbsync_spark.operators.epoch_log import gate_foreach_batch
 from kafka_dbsync_spark.operators.lm_index import (
     _MARKER,
     _gen_name,
@@ -142,42 +143,23 @@ def contamination_gate_foreach_batch(
     routes docs to ``accepted_dir`` (``overlap_bp < max_bp``) or
     ``rejected_dir`` (the Llama-2-style dirty threshold, measurement
     attached for audit). Text that produces no grams admits with
-    ``overlap_bp = 0``. Replay contract = ``lm_gate_foreach_batch``'s:
-    ``e{epoch}`` output dirs, deterministic overwrite, post-commit
-    replay no-op. Stateless across batches — the benchmark is the only
-    state, and it is frozen."""
+    ``overlap_bp = 0``. Replay: the stateless-gate protocol of
+    ``operators/epoch_log.py``. Stateless across batches — the
+    benchmark is the only state, and it is frozen."""
 
-    def fn(batch_df: DataFrame, epoch_id: int) -> None:
-        spark = batch_df.sparkSession
-        acc = os.path.join(accepted_dir, f"e{epoch_id}")
-        rej = os.path.join(rejected_dir, f"e{epoch_id}")
-        if os.path.exists(os.path.join(acc, "_SUCCESS")) and os.path.exists(
-            os.path.join(rej, "_SUCCESS")
-        ):
-            return  # replayed epoch: both outputs already committed
+    def score(batch_df: DataFrame):
         scored = batch_df.join(
             contamination_score_served(
-                spark, index_path, batch_df, id_col, text_col
+                batch_df.sparkSession, index_path, batch_df, id_col, text_col
             ).select(id_col, "overlap_bp"),
             id_col,
             "left",
-        ).withColumn(
-            "overlap_bp", F.coalesce(F.col("overlap_bp"), F.lit(0))
-        ).persist()
-        try:
-            scored.filter(F.col("overlap_bp") < max_bp).write.mode(
-                "overwrite"
-            ).parquet(acc)
-            (
-                scored.filter(F.col("overlap_bp") >= max_bp)
-                .withColumn("reject_reason", F.lit("benchmark_overlap"))
-                .write.mode("overwrite")
-                .parquet(rej)
-            )
-        finally:
-            scored.unpersist()
+        ).withColumn("overlap_bp", F.coalesce(F.col("overlap_bp"), F.lit(0)))
+        return (
+            scored, F.col("overlap_bp") < max_bp, F.lit("benchmark_overlap")
+        )
 
-    return fn
+    return gate_foreach_batch(accepted_dir, rejected_dir, score)
 
 
 def benchmark_index_check(

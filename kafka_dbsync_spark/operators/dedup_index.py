@@ -38,6 +38,19 @@ from kafka_dbsync_spark.operators.dedup import (
     lsh_bands,
     with_minhash_signatures,
 )
+from kafka_dbsync_spark.operators.epoch_log import (
+    _INGEST,
+    _ingest_committed,
+    commit,
+    epoch_dir,
+    read_marker,
+    write_marker,
+)
+from kafka_dbsync_spark.operators.pq_index import (
+    _add_fingerprints,
+    dataset_fingerprint,
+    index_is_built,
+)
 
 _MARKER = "_COMPLETE"
 
@@ -47,18 +60,9 @@ def _sig_cols(num_hashes: int) -> list[str]:
 
 
 def corpus_fingerprint(docs: DataFrame, id_col: str = "doc_id") -> dict:
-    """Same cheap shape as pq_index.dataset_fingerprint: count + max +
-    sum of ids in one column-pruned aggregate."""
-    row = docs.agg(
-        F.count("*").alias("n"),
-        F.max(id_col).alias("max_id"),
-        F.sum(id_col).alias("sum_id"),
-    ).head()
-    return {
-        "n": int(row["n"]),
-        "max_id": None if row["max_id"] is None else int(row["max_id"]),
-        "sum_id": None if row["sum_id"] is None else int(row["sum_id"]),
-    }
+    """pq_index.dataset_fingerprint: count + max + sum of ids in one
+    column-pruned aggregate."""
+    return dataset_fingerprint(docs, id_col)
 
 
 def _banded(sig: DataFrame, id_col: str, num_hashes: int, rows_per_band: int):
@@ -121,31 +125,21 @@ def build_dedup_index(
         _banded(sig_r, id_col, num_hashes, rows_per_band),
         id_col, max_bucket_size,
     ).write.mode("overwrite").parquet(f"{path}/buckets")
-    with open(marker, "w") as f:
-        json.dump(
-            {
-                "fingerprint": fp,
-                "num_hashes": num_hashes,
-                "rows_per_band": rows_per_band,
-                "k": k,
-                "max_bucket_size": max_bucket_size,
-            },
-            f,
-        )
+    write_marker(
+        marker,
+        {
+            "fingerprint": fp,
+            "num_hashes": num_hashes,
+            "rows_per_band": rows_per_band,
+            "k": k,
+            "max_bucket_size": max_bucket_size,
+        },
+    )
 
 
 def dedup_index_is_built(path: str, fingerprint: dict | None = None) -> bool:
-    marker = os.path.join(path, _MARKER)
-    if not os.path.exists(marker):
-        return False
-    if fingerprint is None:
-        return True
-    try:
-        with open(marker) as f:
-            recorded = json.load(f).get("fingerprint")
-    except (ValueError, OSError):
-        return False
-    return recorded == fingerprint
+    """pq_index.index_is_built: the two families share the marker shape."""
+    return index_is_built(path, fingerprint)
 
 
 def dedup_check_incremental(
@@ -246,6 +240,15 @@ def dedup_ingest_foreach_batch(
     the index artifacts, not in Spark state — restarts pick up where
     the index left off.
 
+    Replay: the epoch commits as ``{path}/ingest/e{N}`` (the
+    ``operators/epoch_log.py`` protocol) after the index admission, so
+    a redelivered committed epoch returns before writing anything. The
+    outputs are appends, not epoch dirs, so a crash before the commit
+    still leaves a window: the replay re-appends the epoch's routed
+    rows, and after a crash between the ``dedup_index_add`` append and
+    the commit it also finds the epoch's own docs in the index and logs
+    them as duplicates of themselves.
+
     ``compact_every``: every Nth epoch (by the streaming batchId), the
     append-grown index is folded back to built shape via
     ``dedup_index_compact`` (VERDICT r6 #4 — each append adds parquet
@@ -256,6 +259,8 @@ def dedup_ingest_foreach_batch(
 
     def fn(batch_df: DataFrame, epoch_id: int) -> None:
         spark = batch_df.sparkSession
+        if _ingest_committed(path, epoch_id):
+            return
         # exact in-batch collapse: lowest id survives per exact text
         keep = (
             batch_df.groupBy(F.md5(F.col(text_col)).alias("__k"))
@@ -290,6 +295,7 @@ def dedup_ingest_foreach_batch(
                 dedup_index_add(
                     spark, path, fresh, id_col=id_col, text_col=text_col
                 )
+                commit(epoch_dir(path, _INGEST, epoch_id))
             finally:
                 hits.unpersist()
         finally:
@@ -331,11 +337,7 @@ def dedup_index_remove(
         )
     ids = F.broadcast(remove_ids.select(id_col).distinct())
     marker = os.path.join(path, _MARKER)
-    try:
-        with open(marker) as f:
-            rec = json.load(f)
-    except (ValueError, OSError):
-        rec = {}
+    rec = read_marker(marker) or {}
     if "max_bucket_size" not in rec:
         # refuse BEFORE invalidating the marker (r6 advice #3): a
         # legacy/absent marker leaves the build cap unknown and a
@@ -362,8 +364,7 @@ def dedup_index_remove(
     # source of truth, so the re-cap admits previously-trimmed docs
     _rebuild_buckets(spark, path, remaining, rec, id_col)
     rec["fingerprint"] = corpus_fingerprint(remaining, id_col)
-    with open(marker, "w") as f:
-        json.dump(rec, f)
+    write_marker(marker, rec)
     return {"docs_removed": before - remaining.count()}
 
 
@@ -419,11 +420,7 @@ def dedup_index_compact(
     import shutil
 
     marker = os.path.join(path, _MARKER)
-    try:
-        with open(marker) as f:
-            rec = json.load(f)
-    except (ValueError, OSError):
-        rec = {}
+    rec = read_marker(marker) or {}
     if "max_bucket_size" not in rec:
         raise ValueError(
             f"dedup index marker at {path} is missing or predates the "
@@ -442,8 +439,7 @@ def dedup_index_compact(
     os.rename(sig_staging, sig_src)
     compacted = spark.read.parquet(sig_src)
     _rebuild_buckets(spark, path, compacted, rec, id_col)
-    with open(marker, "w") as f:
-        json.dump(rec, f)
+    write_marker(marker, rec)
     n_files = len(
         [n for n in os.listdir(sig_src) if n.endswith(".parquet")]
     )
@@ -477,28 +473,11 @@ def dedup_index_add(
         id_col, max_bucket_size,
     ).write.mode("append").parquet(f"{path}/buckets")
     marker = os.path.join(path, _MARKER)
-    try:
-        with open(marker) as f:
-            rec = json.load(f)
-    except (ValueError, OSError):
-        rec = {}
-    old = rec.get("fingerprint")
-    add = corpus_fingerprint(new_docs, id_col)
-    if old:
-        add = {
-            "n": old["n"] + add["n"],
-            "max_id": max(
-                x for x in (old["max_id"], add["max_id"]) if x is not None
-            )
-            if (old["max_id"] is not None or add["max_id"] is not None)
-            else None,
-            "sum_id": (old["sum_id"] or 0) + (add["sum_id"] or 0)
-            if (old["sum_id"] is not None or add["sum_id"] is not None)
-            else None,
-        }
-    rec["fingerprint"] = add
-    with open(marker, "w") as f:
-        json.dump(rec, f)
+    rec = read_marker(marker) or {}
+    rec["fingerprint"] = _add_fingerprints(
+        rec.get("fingerprint"), corpus_fingerprint(new_docs, id_col)
+    )
+    write_marker(marker, rec)
 
 
 def dedup_index_check(

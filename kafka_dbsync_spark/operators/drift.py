@@ -18,8 +18,9 @@ Design, in the repo's streaming-state discipline (operators/admission.py):
   bins contribute finite terms; ln is rounded to 6 decimals and each
   term to 10, summed as DECIMAL — deterministic on any engine (the same
   contract the batch oracle proves bit-for-bit).
-- Replay: a committed epoch no-ops; a crash before the psi write leaves
-  no partial state (the single output write IS the commit). PSI rows
+- Replay follows ``operators/epoch_log.py`` with ``psi`` as the commit
+  table; the single output write IS the commit, so a crash before it
+  leaves no partial state. PSI rows
   are per-epoch facts, not running state — nothing to compact beyond
   retention, and reads of the series union committed epoch dirs only.
 
@@ -34,12 +35,14 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from kafka_dbsync_spark.operators.epoch_log import (
+    _read_state,
+    committed,
+    epoch_dir,
+)
+
 _REFERENCE = "reference"
 _PSI = "psi"
-
-
-def _committed(d: str) -> bool:
-    return os.path.exists(os.path.join(d, "_SUCCESS"))
 
 
 def _checked_bin(bin_col: str, n_bins: int):
@@ -112,13 +115,13 @@ def drift_monitor_foreach_batch(
         spark = batch_df.sparkSession
         epoch = int(epoch_id)
         ref_dir = os.path.join(state_dir, _REFERENCE)
-        if not _committed(ref_dir):
+        if not committed(ref_dir):
             raise FileNotFoundError(
                 f"no drift reference at {ref_dir}; call "
                 "seed_drift_reference first"
             )
-        out = os.path.join(state_dir, _PSI, f"e{epoch}")
-        if _committed(out):
+        out = epoch_dir(state_dir, _PSI, epoch)
+        if committed(out):
             return  # replayed epoch
         ref = spark.read.parquet(ref_dir)
         cur = _histogram(batch_df, group_col, bin_col, n_bins, spark)
@@ -163,17 +166,7 @@ def drift_monitor_foreach_batch(
 def read_drift_series(spark: SparkSession, state_dir: str) -> DataFrame | None:
     """The (epoch, group, psi, n) time series across committed epochs
     (None before the first)."""
-    root = os.path.join(state_dir, _PSI)
-    if not os.path.isdir(root):
-        return None
-    dirs = [
-        os.path.join(root, n)
-        for n in sorted(os.listdir(root))
-        if n.startswith("e") and _committed(os.path.join(root, n))
-    ]
-    if not dirs:
-        return None
-    return spark.read.parquet(*dirs)
+    return _read_state(spark, state_dir, _PSI)
 
 
 def psi_over_fixed_bins(

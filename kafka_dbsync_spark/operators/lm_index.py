@@ -51,6 +51,11 @@ from pyspark.sql import functions as F
 
 from kafka_dbsync_spark.functions.text import tokens
 from kafka_dbsync_spark.operators.corpus import doc_bigrams
+from kafka_dbsync_spark.operators.epoch_log import (
+    gate_foreach_batch,
+    read_marker,
+    write_marker,
+)
 
 _MARKER = "_COMPLETE"
 
@@ -183,11 +188,7 @@ def publish_generation(
     marker = os.path.join(path, _MARKER)
     os.makedirs(path, exist_ok=True)
     invalidate_memo(path)
-    try:
-        with open(marker) as f:
-            prev_live_gen = json.load(f).get("gen")
-    except (OSError, ValueError):
-        prev_live_gen = None
+    prev_live_gen = (read_marker(marker) or {}).get("gen")
     final_dir = os.path.join(path, gen)
     if not os.path.exists(final_dir):
         stage = os.path.join(path, f".stage-{gen}-{os.getpid()}")
@@ -198,15 +199,11 @@ def publish_generation(
             # another builder published this generation first; contents
             # are deterministic, so theirs is identical — discard ours
             shutil.rmtree(stage, ignore_errors=True)
-    tmp = marker + f".tmp.{os.getpid()}"
     # marker_rec may be a callable(final_dir) for models whose marker
     # scalars fold from the PUBLISHED artifacts (never a second corpus
     # pass — e.g. the trigram model's N/V from the vocab-sized cu table)
     rec_base = marker_rec(final_dir) if callable(marker_rec) else marker_rec
-    rec = dict(rec_base, gen=gen)
-    with open(tmp, "w") as f:
-        json.dump(rec, f)
-    os.replace(tmp, marker)
+    write_marker(marker, dict(rec_base, gen=gen))
     my_stage_suffix = f"-{os.getpid()}"
     for name in os.listdir(path):
         superseded = (
@@ -255,11 +252,7 @@ def lm_model_is_current(
     if src_path is not None:
         # the metadata tiers can't see a vanished generation dir, so
         # verify servability first (pure filesystem stat)
-        try:
-            with open(os.path.join(path, _MARKER)) as f:
-                gen = json.load(f).get("gen")
-        except (OSError, ValueError):
-            return False
+        gen = (read_marker(os.path.join(path, _MARKER)) or {}).get("gen")
         if gen is None or not os.path.isdir(os.path.join(path, gen)):
             return False
         return validate_cached_artifact(
@@ -354,55 +347,36 @@ def lm_gate_foreach_batch(
     ``trigram_score`` to gate on the persisted order-3 model instead
     (the gate reads only the ppl column, so scorers are drop-in).
 
-    Replay safety: outputs land under ``e{epoch}`` subdirectories and a
-    redelivered epoch whose output already exists returns without
-    writing — so a crash between the two writes re-runs the whole epoch
-    (both dirs are rewritten deterministically), and a post-commit
-    replay is a no-op. Docs with < 2 tokens score NULL ppl and are
-    rejected with reason 'too_short'.
+    Replay: the stateless-gate protocol of ``operators/epoch_log.py``.
+    Docs with < 2 tokens score NULL ppl and are rejected with reason
+    'too_short'.
     """
-    import os
-
     score_fn = scorer or lm_score
 
-    def fn(batch_df: DataFrame, epoch_id: int) -> None:
-        spark = batch_df.sparkSession
-        acc = os.path.join(accepted_dir, f"e{epoch_id}")
-        rej = os.path.join(rejected_dir, f"e{epoch_id}")
-        done = os.path.join(acc, "_SUCCESS")
-        if os.path.exists(done) and os.path.exists(os.path.join(rej, "_SUCCESS")):
-            return  # replayed epoch: both outputs already committed
-        # persist: the scoring lineage (batch scan + doc-n-gram agg +
-        # model join) feeds BOTH writes — without it every epoch pays
-        # the whole pipeline twice (the dedup-index ingest learned this
-        # the hard way; see README's 17.9s note)
+    def score(batch_df: DataFrame):
+        # persisted by the gate: the scoring lineage (batch scan +
+        # doc-n-gram agg + model join) feeds BOTH writes — without it
+        # every epoch pays the whole pipeline twice (the dedup-index
+        # ingest learned this the hard way; see README's 17.9s note)
         scored = batch_df.join(
-            score_fn(spark, model_path, batch_df, id_col, text_col).select(
-                id_col, "ppl"
-            ),
+            score_fn(
+                batch_df.sparkSession, model_path, batch_df, id_col, text_col
+            ).select(id_col, "ppl"),
             id_col,
             "left",
-        ).persist()
-        try:
-            scored.filter(F.col("ppl") <= max_ppl).drop("n_bigrams").write.mode(
-                "overwrite"
-            ).parquet(acc)
-            (
-                scored.filter((F.col("ppl") > max_ppl) | F.col("ppl").isNull())
-                .withColumn(
-                    "reject_reason",
-                    F.when(F.col("ppl").isNull(), F.lit("too_short")).otherwise(
-                        F.lit("high_perplexity")
-                    ),
-                )
-                .drop("n_bigrams")
-                .write.mode("overwrite")
-                .parquet(rej)
-            )
-        finally:
-            scored.unpersist()
+        ).drop("n_bigrams")
+        return (scored, *_ppl_gate(max_ppl))
 
-    return fn
+    return gate_foreach_batch(accepted_dir, rejected_dir, score)
+
+
+def _ppl_gate(max_ppl: float):
+    """``(accept, reason)`` of a perplexity gate: admit ``ppl <=
+    max_ppl``; reject NULL ppl as 'too_short', the rest as
+    'high_perplexity'."""
+    return F.col("ppl") <= max_ppl, F.when(
+        F.col("ppl").isNull(), F.lit("too_short")
+    ).otherwise(F.lit("high_perplexity"))
 
 
 def build_trigram_model(

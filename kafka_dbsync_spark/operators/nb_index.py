@@ -45,6 +45,7 @@ from kafka_dbsync_spark.operators.corpus import (
     nb_score_tables,
     nb_train_tables,
 )
+from kafka_dbsync_spark.operators.epoch_log import gate_foreach_batch
 from kafka_dbsync_spark.operators.lm_index import (
     _MARKER,
     _gen_name,
@@ -177,57 +178,33 @@ def nb_gate_foreach_batch(
     for audit; rows the tokenizer empties label NULL and reject as
     'no_tokens'.
 
-    Replay safety is ``lm_gate_foreach_batch``'s contract verbatim:
-    outputs land under ``e{epoch}`` dirs, a redelivered epoch whose
-    outputs are both committed returns without writing, and a crash
-    between the two writes re-runs the epoch deterministically."""
+    Replay: the stateless-gate protocol of ``operators/epoch_log.py``."""
     keep = sorted({str(c) for c in keep_classes})
 
-    def fn(batch_df: DataFrame, epoch_id: int) -> None:
-        spark = batch_df.sparkSession
-        acc = os.path.join(accepted_dir, f"e{epoch_id}")
-        rej = os.path.join(rejected_dir, f"e{epoch_id}")
-        if os.path.exists(os.path.join(acc, "_SUCCESS")) and os.path.exists(
-            os.path.join(rej, "_SUCCESS")
-        ):
-            return  # replayed epoch: both outputs already committed
+    def label(batch_df: DataFrame):
         # classify only tokenizable rows (the fused nb_source_predict
         # query pre-filters the same way — a normalized-empty doc would
         # otherwise score through split('')'s single '' token); empties
-        # fall out of the left join as NULL pred -> 'no_tokens'.
-        # persist: the labeling lineage (batch scan + token agg + C-way
-        # model fanout + argmax window) feeds BOTH writes
+        # fall out of the left join as NULL pred -> 'no_tokens'. The
+        # gate persists the result: the labeling lineage (batch scan +
+        # token agg + C-way model fanout + argmax window) feeds BOTH
+        # writes
         from kafka_dbsync_spark.functions.text import token_count
 
         scoreable = batch_df.filter(token_count(text_col) > 0)
         labeled = batch_df.join(
             nb_classify_served(
-                spark, model_path, scoreable, id_col, text_col
+                batch_df.sparkSession, model_path, scoreable, id_col, text_col
             ),
             id_col,
             "left",
-        ).persist()
-        try:
-            labeled.filter(F.col("pred").isin(keep)).write.mode(
-                "overwrite"
-            ).parquet(acc)
-            (
-                labeled.filter(
-                    ~F.col("pred").isin(keep) | F.col("pred").isNull()
-                )
-                .withColumn(
-                    "reject_reason",
-                    F.when(
-                        F.col("pred").isNull(), F.lit("no_tokens")
-                    ).otherwise(F.lit("class_blocked")),
-                )
-                .write.mode("overwrite")
-                .parquet(rej)
-            )
-        finally:
-            labeled.unpersist()
+        )
+        reason = F.when(F.col("pred").isNull(), F.lit("no_tokens")).otherwise(
+            F.lit("class_blocked")
+        )
+        return labeled, F.col("pred").isin(keep), reason
 
-    return fn
+    return gate_foreach_batch(accepted_dir, rejected_dir, label)
 
 
 def nb_classify_served(

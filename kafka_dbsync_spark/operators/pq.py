@@ -120,41 +120,6 @@ def codebooks_as_array(codebooks_long: DataFrame) -> DataFrame:
     )
 
 
-def _d2(a, b):
-    """Squared L2 between two array columns: per-dim (x-y)² via zip_with,
-    summed in index order by a left fold (matches the oracle's fold)."""
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: (x - y) * (x - y)),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-
-
-def adc_distance_expr(query_src, d_sub: int = 8, dist_decimals: int = 6):
-    """ADC total-distance expression over a row carrying ``codes``
-    (array<int>) and the broadcast ``__books`` column: Σ over subspaces
-    of the rounded squared-L2 between the query subvector (sliced from
-    ``query_src`` — a literal array or a per-row column) and the row's
-    SELECTED codeword. The codeword is selected by its code value, not
-    blind dense position — entries may be sparse when some id%k residue
-    class had no training rows (ADVICE r3). ``codebooks_as_array``
-    pre-densifies the codeword table by code position ONCE at build
-    time (``dense[c] = cvec of code c``), so the per-row lookup here is
-    a single O(1) ``F.get`` (0-based, NULL-safe under ANSI) with no
-    verify/fallback branch in the hot expression — the VERDICT-r4
-    regression fix. A code with no trained codeword yields a NULL term
-    (same contract as the old filter-miss path). Shared by
-    ``pq_adc_topk``, ``ivfpq_search``, and the persisted-index serving
-    path (operators/pq_index.py)."""
-
-    def term(s):
-        qsub = F.slice(query_src, s["m"] * d_sub + 1, d_sub)
-        code = F.element_at(F.col("codes"), s["m"] + 1)
-        return F.round(_d2(qsub, F.get(s["dense"], code)), dist_decimals)
-
-    return F.aggregate(F.col("__books"), F.lit(0.0), lambda acc, s: acc + term(s))
-
-
 def pq_encode(
     embeddings: DataFrame,
     codebooks_long: DataFrame,

@@ -46,6 +46,14 @@ import tempfile
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from kafka_dbsync_spark.operators.epoch_log import (
+    _INGEST,
+    _ingest_committed,
+    commit,
+    epoch_dir,
+    read_marker,
+    write_marker,
+)
 from kafka_dbsync_spark.operators.pq import (
     pq_codebooks,
     pq_encode,
@@ -82,6 +90,24 @@ def dataset_fingerprint(
         "n": int(row["n"]),
         "max_id": None if row["max_id"] is None else int(row["max_id"]),
         "sum_id": None if row["sum_id"] is None else int(row["sum_id"]),
+    }
+
+
+def _add_fingerprints(old: dict | None, add: dict) -> dict:
+    """The fingerprint of an index after appending rows fingerprinted
+    ``add`` to one fingerprinted ``old`` (None: nothing recorded)."""
+    if not old:
+        return add
+    return {
+        "n": old["n"] + add["n"],
+        "max_id": max(
+            x for x in (old["max_id"], add["max_id"]) if x is not None
+        )
+        if (old["max_id"] is not None or add["max_id"] is not None)
+        else None,
+        "sum_id": (old["sum_id"] or 0) + (add["sum_id"] or 0)
+        if (old["sum_id"] is not None or add["sum_id"] is not None)
+        else None,
     }
 
 
@@ -274,8 +300,7 @@ def build_pq_index(
         rec["id_digest"] = _digest
     if src_path is not None:
         rec["src_sig"] = files_signature(src_path)
-    with open(marker, "w") as f:
-        json.dump(rec, f)
+    write_marker(marker, rec)
 
 
 def index_is_current(
@@ -318,12 +343,7 @@ def index_is_built(path: str, fingerprint: dict | None = None) -> bool:
         return False
     if fingerprint is None:
         return True
-    try:
-        with open(marker) as f:
-            recorded = json.load(f).get("fingerprint")
-    except (ValueError, OSError):
-        return False
-    return recorded == fingerprint
+    return (read_marker(marker) or {}).get("fingerprint") == fingerprint
 
 
 def index_summary(spark: SparkSession, path: str) -> DataFrame:
@@ -778,11 +798,7 @@ def pq_index_add(
     re-train when drift accumulates — the standard IVF operating
     procedure, measured by the ``ann_recall_report`` curve."""
     marker = os.path.join(path, _MARKER)
-    try:
-        with open(marker) as f:
-            rec = json.load(f)
-    except (ValueError, OSError):
-        rec = {}
+    rec = read_marker(marker) or {}
     # the batch bloom is pinned to the MARKER digest's m so the fold
     # below OR-composes instead of dropping the bloom (r13: m scales
     # per digest; digest_or keeps blooms only at equal m)
@@ -812,8 +828,7 @@ def pq_index_add(
     # the next validation falls back to one exact check and re-memoizes
     # (cache_validation tier 3)
     rec.pop("src_sig", None)
-    with open(marker, "w") as f:
-        json.dump(rec, f)
+    write_marker(marker, rec)
     from kafka_dbsync_spark.operators.cache_validation import invalidate_memo
 
     invalidate_memo(path)
@@ -842,22 +857,8 @@ def pq_index_add(
     run_job_chains(_codes_chain, _flat_chain)
     # PHASE 2: the index now covers build-time rows PLUS the added
     # ones — advance the marker's dataset fingerprint
-    old = rec.get("fingerprint")
-    if old:
-        add = {
-            "n": old["n"] + add["n"],
-            "max_id": max(
-                x for x in (old["max_id"], add["max_id"]) if x is not None
-            )
-            if (old["max_id"] is not None or add["max_id"] is not None)
-            else None,
-            "sum_id": (old["sum_id"] or 0) + (add["sum_id"] or 0)
-            if (old["sum_id"] is not None or add["sum_id"] is not None)
-            else None,
-        }
-    rec["fingerprint"] = add
-    with open(marker, "w") as f:
-        json.dump(rec, f)
+    rec["fingerprint"] = _add_fingerprints(rec.get("fingerprint"), add)
+    write_marker(marker, rec)
     invalidate_memo(path)
 
 
@@ -918,11 +919,7 @@ def pq_index_remove(
             "from an absent or mid-build index is a caller bug — build "
             "with build_pq_index first."
         )
-    try:
-        with open(marker) as f:
-            rec = json.load(f)
-    except ValueError:
-        rec = {}
+    rec = read_marker(marker) or {}
     codes = spark.read.parquet(f"{path}/codes")
     # Refuse a takedown that would empty the index BEFORE invalidating
     # the marker (ADVICE r8): with every cell rmtree'd the fingerprint
@@ -974,8 +971,7 @@ def pq_index_remove(
     if "src_sig" in rec:
         rec["built_src_sig"] = rec.pop("src_sig")
     rec["removed_ids"] = sorted(set(rec.get("removed_ids", [])) | set(ids))
-    with open(marker, "w") as f:
-        json.dump(rec, f)
+    write_marker(marker, rec)
     invalidate_memo(path)
     return {"vectors_removed": n_removed, "cells_rewritten": len(affected)}
 
@@ -995,15 +991,10 @@ def index_serves_removal(
     runs: marker JSON + one os.scandir of the source."""
     from kafka_dbsync_spark.operators.cache_validation import files_signature
 
-    marker = os.path.join(path, _MARKER)
-    if not os.path.exists(marker):
-        return False
-    try:
-        with open(marker) as f:
-            rec = json.load(f)
-    except (ValueError, OSError):
-        return False
-    if rec.get("removed_ids") != sorted({int(i) for i in removed_ids}):
+    rec = read_marker(os.path.join(path, _MARKER))
+    if rec is None or rec.get("removed_ids") != sorted(
+        {int(i) for i in removed_ids}
+    ):
         return False
     if src_path is not None:
         sig = files_signature(src_path)
@@ -1013,7 +1004,7 @@ def index_serves_removal(
 
 
 def _pending_ingest_epochs(path: str) -> set[int]:
-    """Epochs with streaming-ingest residue but no ingest/e{N}/_SUCCESS:
+    """Epochs with streaming-ingest residue but no ingest/e{N} commit:
     leftover staging dirs (``.ingest_e{N}`` / ``.ingest_flat_e{N}``) or
     epoch-prefixed live files (``e{N}-*.parquet`` in a codes cell or in
     flat_codes). Pure os.scandir — no Spark job."""
@@ -1076,7 +1067,7 @@ def pq_index_compact(
             "an absent or mid-build index is a caller bug."
         )
     # Pending-ingest guard (ADVICE r8, medium): an ingest epoch that
-    # crashed before its ingest/e{N}/_SUCCESS commit may have left
+    # crashed before its ingest/e{N} commit may have left
     # e{N}-prefixed files in live cell dirs (and/or its staging dirs).
     # Folding those into untagged part files would make the stream's
     # replay — whose convergence argument is delete-by-prefix in
@@ -1124,18 +1115,13 @@ def pq_index_compact(
         ).parquet(flat_staging)
         shutil.rmtree(flat_src)
         os.rename(flat_staging, flat_src)
-    with open(marker, "w") as f:
-        f.write(rec_raw)
+    write_marker(marker, rec_raw)
     invalidate_memo(path)
     return {
         "cells": len(cells),
         "code_files_before": before,
         "code_files_after": after,
     }
-
-
-def _ingest_committed(path: str, epoch: int) -> bool:
-    return os.path.exists(os.path.join(path, "ingest", f"e{epoch}", "_SUCCESS"))
 
 
 def _move_epoch_files(staging_cell: str, target_cell: str, prefix: str) -> None:
@@ -1183,7 +1169,8 @@ def pq_index_ingest_foreach_batch(
        column-pruned aggregate — derived from final state, so the
        refresh itself is replay-idempotent, unlike add()'s incremental
        fold which would double-count);
-    5. commit the epoch LAST (``ingest/e{N}/_SUCCESS``).
+    5. commit the epoch LAST (``ingest/e{N}``, the
+       ``operators/epoch_log.py`` commit).
 
     Crash visibility contract (documented, matching every production
     ANN ingest): rows of an UNCOMMITTED epoch may be served during the
@@ -1232,11 +1219,7 @@ def pq_index_ingest_foreach_batch(
         # a redelivered epoch just re-sets the same bits). The
         # fingerprint refresh stays AFTER the moves (step 4): it is
         # derived from final on-disk state.
-        try:
-            with open(marker) as f:
-                rec = json.load(f)
-        except (ValueError, OSError):
-            rec = {}
+        rec = read_marker(marker) or {}
         if "id_digest" in rec:
             _rec_d = rec.get("id_digest") or {}
             folded = _digest_or(
@@ -1252,8 +1235,7 @@ def pq_index_ingest_foreach_batch(
                 rec["id_digest"] = folded
             else:
                 rec.pop("id_digest", None)
-            with open(marker, "w") as f:
-                json.dump(rec, f)
+            write_marker(marker, rec)
             invalidate_memo(path)
         prefix = f"e{epoch}-"
         for d in sorted(os.listdir(staging)):
@@ -1269,23 +1251,15 @@ def pq_index_ingest_foreach_batch(
         shutil.rmtree(staging_flat, ignore_errors=True)
         # fingerprint from the SURVIVING codes: replay-idempotent (the
         # digest was already folded in phase 1, before the moves)
-        try:
-            with open(marker) as f:
-                rec = json.load(f)
-        except (ValueError, OSError):
-            rec = {}
+        rec = read_marker(marker) or {}
         rec["fingerprint"] = dataset_fingerprint(
             spark.read.parquet(f"{path}/codes")
         )
         if "src_sig" in rec:
             rec["built_src_sig"] = rec.pop("src_sig")
-        with open(marker, "w") as f:
-            json.dump(rec, f)
+        write_marker(marker, rec)
         invalidate_memo(path)
-        commit_dir = os.path.join(path, "ingest", f"e{epoch}")
-        os.makedirs(commit_dir, exist_ok=True)
-        with open(os.path.join(commit_dir, "_SUCCESS"), "w") as f:
-            f.write("")
+        commit(epoch_dir(path, _INGEST, epoch))
         if compact_every and epoch > 0 and epoch % compact_every == 0:
             pq_index_compact(spark, path)
 
@@ -1430,8 +1404,7 @@ def build_pq_shard(
     }
     if _digest is not None:
         rec["id_digest"] = _digest
-    with open(marker, "w") as f:
-        json.dump(rec, f)
+    write_marker(marker, rec)
 
 
 def _check_id_disjoint(
@@ -1540,16 +1513,8 @@ def pq_index_merge(
             "same precondition). Re-encode one side with build_pq_shard "
             "from the other's quantizers."
         )
-    try:
-        with open(dst_marker) as f:
-            rec = json.load(f)
-    except ValueError:
-        rec = {}
-    try:
-        with open(src_marker) as f:
-            src_rec = json.load(f)
-    except ValueError:
-        src_rec = {}
+    rec = read_marker(dst_marker) or {}
+    src_rec = read_marker(src_marker) or {}
     # Merge guards, metadata-first (VERDICT r10 #3: the r10 probes were
     # three Spark jobs re-reading codes at every merge — right checks,
     # wrong cost model). Each guard now runs the id_digest ladder
@@ -1677,7 +1642,6 @@ def pq_index_merge(
     # the merged content is no longer derivable from either source
     # directory listing — same reasoning as pq_index_add
     rec.pop("src_sig", None)
-    with open(dst_marker, "w") as f:
-        json.dump(rec, f)
+    write_marker(dst_marker, rec)
     invalidate_memo(dst_path)
     return {"vectors_merged": n_merged, "cells_touched": cells_touched}

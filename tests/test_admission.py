@@ -143,10 +143,8 @@ def test_compaction_preserves_state_and_replay_safety(spark, model, tmp_path):
     must (a) leave read_admitted identical, (b) keep suppressing
     duplicates of pre-compaction admissions, (c) keep replays of
     folded epochs no-ops, and (d) bound the visible state dirs."""
-    from kafka_dbsync_spark.operators.admission import (
-        _epoch_dirs,
-        compact_admission_state,
-    )
+    from kafka_dbsync_spark.operators.admission import compact_admission_state
+    from kafka_dbsync_spark.operators.epoch_log import _epoch_dirs
 
     state = str(tmp_path / "state")
     seed_admitted_hashes(state, _df(spark, TRAIN[:2]), F.md5(F.col("text")))
@@ -226,10 +224,8 @@ def test_compaction_crash_between_base_write_and_cleanup(
     compaction must converge and clean up."""
     import shutil
 
-    from kafka_dbsync_spark.operators.admission import (
-        _epoch_dirs,
-        compact_admission_state,
-    )
+    from kafka_dbsync_spark.operators.admission import compact_admission_state
+    from kafka_dbsync_spark.operators.epoch_log import _epoch_dirs
 
     state = str(tmp_path / "state")
     fn = admission_foreach_batch(model, state, max_ppl=8.0, compact_every=None)
@@ -264,7 +260,7 @@ def test_auto_compaction_bounds_state_dirs(spark, model, tmp_path):
     """compact_every folds state inline from the batch function: after
     many epochs the visible hash-state dirs stay O(1) and the admitted
     set equals the no-compaction twin's."""
-    from kafka_dbsync_spark.operators.admission import _epoch_dirs
+    from kafka_dbsync_spark.operators.epoch_log import _epoch_dirs
 
     state_a = str(tmp_path / "auto")
     state_b = str(tmp_path / "manual")
