@@ -10,7 +10,7 @@ PYSPARK_VERSION ?= $(shell python3 -c "import pyspark; print(pyspark.__version__
 KAFKA_PACKAGE    = org.apache.spark:spark-sql-kafka-0-10_2.13:$(PYSPARK_VERSION)
 COMPOSE          = docker compose -f deployment/kafka/docker-compose.yaml
 
-.PHONY: kafka-up kafka-down kafka-live-test test nightly perfbench-smoke bench
+.PHONY: kafka-up kafka-down kafka-live-test test nightly sinks perfbench-smoke bench
 
 kafka-up:
 	$(COMPOSE) up -d --wait
@@ -32,6 +32,13 @@ test:
 # the nightly tier that pytest.ini deselects by default
 nightly:
 	python -m pytest tests/ -m nightly -q -p no:cacheprovider
+
+# the DB-sink suites (CDC apply, SCD2 history, document), nightly included
+sinks:
+	python -m pytest -m "" -q -p no:cacheprovider tests/test_streaming.py \
+	  tests/test_sink_write_path.py tests/test_distributed_apply.py \
+	  tests/test_history_sink.py tests/test_document_sink.py \
+	  tests/test_streaming_extras.py tests/test_review_fixes.py
 
 # the CDC benchmark's own tests, at smoke size
 perfbench-smoke:

@@ -1247,12 +1247,19 @@ def setsim_prefix_join(
     k: int = 3,
     threshold: float = 0.5,
 ) -> DataFrame:
-    """EXACT set-similarity self-join via prefix filtering (the
-    SSJoin/PPJoin family: Chaudhuri et al. 2006, Xiao et al. 2011):
-    every pair of documents whose k-gram shingle sets have Jaccard >=
-    ``threshold`` — with a COMPLETENESS guarantee the MinHash-LSH path
-    deliberately trades away (LSH misses pairs with band-collision
-    probability < 1).
+    """Set-similarity self-join via prefix filtering (the SSJoin/PPJoin
+    family: Chaudhuri et al. 2006, Xiao et al. 2011): every pair of
+    documents whose k-gram shingle sets have Jaccard >= ``threshold`` —
+    with a COMPLETENESS guarantee the MinHash-LSH path deliberately
+    trades away (LSH misses pairs with band-collision probability < 1).
+
+    Exactness contract (probabilistic, 128-bit): shingles are compared
+    as 128-bit hashes (``xxhash64(g)``, ``xxhash64(1, g)``) in the
+    candidate keys and the verifier, and clones collapse on md5 of the
+    sorted shingle set. The output equals the string-exact join unless
+    two distinct shingles collide in all 128 bits, or two distinct
+    shingle sets share an md5 digest. For N distinct shingles (or sets)
+    the chance is about N**2 / 2**129: negligible, but not zero.
 
     Prefix filter: order the shingle universe by (document frequency
     asc, shingle asc) — a total order that puts the rarest shingles

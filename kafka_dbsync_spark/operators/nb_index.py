@@ -128,7 +128,7 @@ def build_nb_model(
     try:
         publish_generation(path, gen, write_stage, rec)
     finally:
-        # nb_train_tables persists counts (three consumers: the counts
+        # counts is persisted above (three consumers: the counts
         # write, totals, vocab — one train tokenize instead of three);
         # the build is imperative, so drop the cache when done
         counts.unpersist()

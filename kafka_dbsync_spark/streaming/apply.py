@@ -6,21 +6,24 @@ Per micro-batch:
 1. **validate** → corrupt branch to the dead-letter table (K9/K10)
 2. **last-write-wins per key** (A3) — the correctness cliff: a set-based
    merge would otherwise apply duplicate keys in arbitrary order
-3. **group by target table** (A1), then by op (A2)
+3. **route by target table** (A1) and op (A2), in one streamed pass
 4. **auto-create / auto-evolve** (K6/K7) from the batch schema
 5. **batched upserts + deletes** through the dialect SQL (K11)
 
 The write contract, shared by this engine, the SCD2 history sink and the
-document sink (they reuse ``transaction``, ``executemany_chunked``,
-``write_changes`` and ``_ensure_table`` below):
+document sink (they reuse ``transaction``, ``write_batch`` and
+``_ensure_table`` below):
 
-- each table's DDL and DML run in ONE transaction — commit at the end,
-  rollback on any failure, the connection always closed;
+- a batch's data rows stream through ONE read into ONE transaction that
+  covers every table (the reference commits a whole ``put()`` poll batch
+  the same way, IidrCdcSinkTask.java:132-154); a table's DDL runs when
+  its first row arrives; commit at the end, rollback on any failure, the
+  connection always closed;
 - a table counts as created only after that commit: on a target whose
   DDL is transactional (PostgreSQL) a rollback undoes the CREATE too, so
   the retry must issue it again;
-- the dead-letter table is written in its own transaction, before any
-  data table.
+- the dead-letter table is written in its own transaction, before the
+  data tables.
 
 Structured Streaming's checkpoint + the idempotent keyed UPSERT then give
 exactly-once effect over at-least-once delivery
@@ -50,7 +53,8 @@ from __future__ import annotations
 import logging
 from collections.abc import Callable, Iterable, Sequence
 from contextlib import contextmanager
-from itertools import islice
+from itertools import chain, islice
+from operator import itemgetter
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -115,38 +119,82 @@ def executemany_chunked(cur, sql: str, params: Iterable[Sequence]) -> int:
     return n
 
 
-def write_changes(
-    cur,
-    rows: Iterable,
-    dialect: Dialect,
-    table: str,
-    pk: Sequence[str],
-    value_cols: Sequence[str],
-    op_col: str,
-) -> None:
-    """Batched upserts + deletes of ``rows`` (by ``op_col``) into
-    ``table`` — one pass, each op flushed as its buffer fills. Keys are
-    unique after last-write-wins dedup, so flush order between the
-    upsert and delete statements is free."""
+def change_statements(dialect: Dialect, pk: Sequence[str], value_cols: Sequence[str]):
+    """``statements`` for ``write_batch``: a table's upsert and delete SQL,
+    keyed by op, with the columns each takes."""
     cols = [*pk, *value_cols]
-    upsert = dialect.upsert_sql(table, cols, pk)
-    delete = dialect.delete_sql(table, pk)
-    ups: list[tuple] = []
-    dels: list[tuple] = []
-    for r in rows:
-        op = r[op_col]
-        if op == OP_UPSERT:
-            ups.append(tuple(r[c] for c in cols))
-            if len(ups) >= CHUNK_ROWS:
-                executemany_chunked(cur, upsert, ups)
-                ups = []
-        elif op == OP_DELETE:
-            dels.append(tuple(r[c] for c in pk))
-            if len(dels) >= CHUNK_ROWS:
-                executemany_chunked(cur, delete, dels)
-                dels = []
-    executemany_chunked(cur, upsert, ups)
-    executemany_chunked(cur, delete, dels)
+    return lambda table: {
+        OP_UPSERT: (dialect.upsert_sql(table, cols, pk), cols),
+        OP_DELETE: (dialect.delete_sql(table, pk), list(pk)),
+    }
+
+
+def write_batch(
+    connection_factory: Callable[[], object],
+    rows: Iterable[Sequence],
+    columns: Sequence[str],
+    statements: Callable[[str], dict],
+    table_col: str,
+    op_col: str,
+    ensure: Callable[[object, str], None] | None = None,
+    known_tables: set[str] | None = None,
+) -> None:
+    """Write ``rows`` (laid out as ``columns``, from any mix of tables) in
+    one pass and ONE transaction; an empty ``rows`` opens no connection.
+
+    A table's first row runs ``ensure(conn, table)`` (its DDL) and builds
+    its statements: ``statements(table)`` maps each ``op_col`` value to
+    ``(sql, param columns)``; a row whose op has none is skipped. Rows
+    buffer per statement, and every buffer is flushed once CHUNK_ROWS rows
+    are buffered in total, so memory stays O(CHUNK_ROWS) whatever the table
+    count. Flush order between statements is free: after last-write-wins
+    a key has one change per batch (the SCD2 close skips the versions its
+    batch writes). The tables written join ``known_tables`` once the
+    commit succeeded (see ``transaction``)."""
+    rows = iter(rows)
+    first = next(rows, None)
+    if first is None:
+        return
+    at = {c: i for i, c in enumerate(columns)}
+    t_at, op_at = at[table_col], at[op_col]
+    plans: dict[str, dict] = {}  # table -> op -> (param getter, buffer slot)
+    sqls: list[str] = []
+    bufs: list[list[tuple]] = []
+
+    def flush() -> None:
+        for i, buf in enumerate(bufs):
+            if buf:
+                cur.executemany(sqls[i], buf)
+                bufs[i] = []
+
+    # plans.keys() is a live view, read only after the commit
+    with transaction(connection_factory, known_tables, plans.keys()) as conn:
+        cur = conn.cursor()
+        buffered = 0
+        for r in chain([first], rows):
+            table = r[t_at]
+            plan = plans.get(table)
+            if plan is None:
+                if ensure is not None:
+                    ensure(conn, table)
+                plan = plans[table] = {}
+                for op, (sql, params) in statements(table).items():
+                    idx = [at[c] for c in params]
+                    # itemgetter returns a bare value for one index
+                    get = itemgetter(*idx) if len(idx) > 1 else lambda r, i=idx[0]: (r[i],)
+                    plan[op] = (get, len(bufs))
+                    sqls.append(sql)
+                    bufs.append([])
+            stmt = plan.get(r[op_at])
+            if stmt is None:
+                continue
+            get, slot = stmt
+            bufs[slot].append(get(r))
+            buffered += 1
+            if buffered >= CHUNK_ROWS:
+                flush()
+                buffered = 0
+        flush()
 
 
 class CdcApplyEngine:
@@ -228,10 +276,10 @@ class CdcApplyEngine:
         Expects columns: pk fields, value columns, op, target_table,
         order columns, and (optionally) error_reason + dead-letter fields.
         """
-        # the corrupt branch, the distinct-tables probe, and the per-table
-        # applies are separate actions — cache the decoded batch so the
-        # upstream decode/validate plan runs once, like the reference's
-        # single pass over the poll batch
+        # the corrupt branch, the path choice and the data write are
+        # separate actions — cache the decoded batch so the upstream
+        # decode/validate plan runs once, like the reference's single pass
+        # over the poll batch
         batch_df = batch_df.persist()
         try:
             self._apply_valid(self._split_corrupt(batch_df))
@@ -256,13 +304,13 @@ class CdcApplyEngine:
         routing = (self.table_col, self.op_col)
         stored = T.StructType([f for f in per_table.schema if f.name not in routing])
 
+        statements = change_statements(self.dialect, self.pk_fields, self.value_cols)
         if self._should_distribute(valid):
             self.last_path = "distributed"
-            self._apply_distributed(per_table, valid, stored)
+            self._apply_distributed(per_table, valid, stored, statements)
         else:
             self.last_path = "driver"
-            with self._fan_out(valid, per_table) as tables:
-                self._apply_driver_side(per_table, tables, stored)
+            self._write(per_table, statements, stored, self.pk_fields)
 
     def _should_distribute(self, valid: DataFrame) -> bool:
         """Pick the apply path. ``distribute=True``/``False`` forces it;
@@ -286,36 +334,6 @@ class CdcApplyEngine:
     def _transaction(self, *tables: str):
         return transaction(self.connection_factory, self._known_tables, tables)
 
-    # -- per-table fan-out ------------------------------------------------------
-    def _tables(self, valid: DataFrame) -> list[str]:
-        """Distinct target tables, probed on the CACHED pre-dedup batch (a
-        one-column partial-agg shuffle) — probing a deduped frame instead
-        would run the expensive dedup shuffle just to list tables. Dedup
-        never drops a table, so the sets match."""
-        return sorted(
-            r[0] for r in valid.select(self.table_col).distinct().collect()
-        )
-
-    @contextmanager
-    def _fan_out(self, valid: DataFrame, *frames: DataFrame):
-        """Yield the batch's tables. With more than one, materialize
-        ``frames`` once (ONE parallel job each) so the N per-table passes
-        read cache instead of each re-running the dedup shuffle; a
-        single-table batch (one topic → one table, the common deployment)
-        streams straight through — persisting would only add a
-        materialization pass."""
-        tables = self._tables(valid)
-        fan_out = len(tables) > 1
-        if fan_out:
-            for f in frames:
-                f.persist().count()
-        try:
-            yield tables
-        finally:
-            if fan_out:
-                for f in frames:
-                    f.unpersist()
-
     # -- corrupt branch (K9/K10) ---------------------------------------------
     def _split_corrupt(self, batch_df: DataFrame) -> DataFrame:
         """Dead-letter the rows carrying an ``error_reason``; return the
@@ -336,11 +354,11 @@ class CdcApplyEngine:
     def _handle_corrupt(self, corrupt: DataFrame) -> None:
         if not self.corrupt_table and self.errors_tolerance == "all":
             return  # silent-skip mode with no DLQ: nothing to evaluate
-        # cheap emptiness probe on the cached batch — the common clean
-        # batch must not open a DLQ connection (or depend on DLQ health)
-        if corrupt.isEmpty():
-            return
         if self.corrupt_table:
+            # cheap emptiness probe on the cached batch — the common clean
+            # batch must not open a DLQ connection (or depend on DLQ health)
+            if corrupt.isEmpty():
+                return
             table = self.corrupt_table
             cols = [c for c in corrupt.columns if c in CORRUPT_TABLE_SCHEMA]
             with self._transaction(table) as conn:
@@ -379,34 +397,31 @@ class CdcApplyEngine:
         return reason[: limit - 3] + "..."
 
     # -- apply paths ----------------------------------------------------------
-    def _apply_driver_side(
-        self, per_table: DataFrame, tables: list[str], stored: T.StructType
+    def _write(
+        self, df: DataFrame, statements, schema: T.StructType, pk: Sequence[str]
     ) -> None:
-        """One connection, one transaction per table (the reference's
-        shape: a single sink task with a JDBC connection).
-
-        Rows stream through the driver via ``toLocalIterator`` in bounded
-        chunks, while the transaction still spans the whole table."""
-        for table in tables:
-            tdf = per_table.filter(F.col(self.table_col) == table).drop(self.table_col)
-            with self._transaction(table) as conn:
-                self._ensure_table(conn, table, stored, self.pk_fields)
-                write_changes(
-                    conn.cursor(), tdf.toLocalIterator(prefetchPartitions=True),
-                    self.dialect, table, self.pk_fields, self.value_cols, self.op_col,
-                )
+        """Driver side: stream ``df`` through one ``toLocalIterator`` into
+        one connection and ONE transaction for all its tables (the
+        reference's shape: a single sink task with a JDBC connection). A
+        table is created/evolved to ``schema`` when its first row
+        arrives."""
+        write_batch(
+            self.connection_factory, df.toLocalIterator(prefetchPartitions=True),
+            df.columns, statements, self.table_col, self.op_col,
+            ensure=lambda conn, table: self._ensure_table(conn, table, schema, pk),
+            known_tables=self._known_tables,
+        )
 
     def _apply_distributed(
-        self, per_table: DataFrame, valid: DataFrame, stored: T.StructType
+        self, per_table: DataFrame, valid: DataFrame, stored: T.StructType, statements
     ) -> None:
         """Executor-side apply: repartition by (table, pk) so each key
         lands on exactly one partition, then one connection per partition.
         Requires a picklable connection factory (e.g. a psycopg2 DSN
         closure) and a target DB that takes concurrent writers."""
         factory = self.connection_factory
-        dialect = self.dialect
         pk = self.pk_fields
-        value_cols = self.value_cols
+        columns = per_table.columns
         op_col = self.op_col
         table_col = self.table_col
 
@@ -415,22 +430,15 @@ class CdcApplyEngine:
         # auto_evolve semantics as the driver-side path. Every table
         # shares the batch schema, so no per-table filtering is needed.
         if self.auto_create or self.auto_evolve:
-            tables = self._tables(valid)
+            # distinct tables, probed on the CACHED pre-dedup batch (a
+            # one-column partial-agg shuffle); dedup never drops a table
+            tables = sorted(r[0] for r in valid.select(table_col).distinct().collect())
             with self._transaction(*tables) as conn:
                 for table in tables:
                     self._ensure_table(conn, table, stored, pk)
 
         def apply_partition(rows) -> None:
-            rows = list(rows)
-            if not rows:
-                return
-            by_table: dict[str, list] = {}
-            for r in rows:
-                by_table.setdefault(r[table_col], []).append(r)
-            with transaction(factory) as conn:
-                cur = conn.cursor()
-                for table, trows in by_table.items():
-                    write_changes(cur, trows, dialect, table, pk, value_cols, op_col)
+            write_batch(factory, rows, columns, statements, table_col, op_col)
 
         keys = [table_col] + pk
         if self.num_partitions is not None:

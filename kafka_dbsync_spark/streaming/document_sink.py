@@ -22,8 +22,8 @@ single-writer stream in bounded chunks (the connector's tasks.max=1
 shape).
 
 This sink overrides only the ``_id`` extraction, the tombstone policy
-and the fixed collection DDL; the transaction and the chunked
-replace/delete writer are the CDC engine's (``streaming/apply.py``).
+and the fixed collection DDL; the one-pass, one-transaction
+replace/delete writer is the CDC engine's (``streaming/apply.py``).
 """
 
 from __future__ import annotations
@@ -35,7 +35,7 @@ from pyspark.sql import functions as F
 
 from kafka_dbsync_spark.functions.entrytype import OP_DELETE, OP_UPSERT
 from kafka_dbsync_spark.operators.merge import latest_by_key
-from kafka_dbsync_spark.streaming.apply import transaction, write_changes
+from kafka_dbsync_spark.streaming.apply import change_statements, write_batch
 from kafka_dbsync_spark.streaming.dialects import SqliteDialect
 
 # replace = PostgreSQL-style ON CONFLICT upsert on _id, delete by _id
@@ -77,8 +77,6 @@ class DocumentApplyEngine:
         self.id_field = id_field
         self.tombstones = tombstones
         self.order_col = order_col
-        # collections whose CREATE has committed (see ``transaction``)
-        self._known_tables: set[str] = set()
 
     def foreach_batch(self):
         def fn(batch_df: DataFrame, epoch_id: int) -> None:
@@ -102,21 +100,20 @@ class DocumentApplyEngine:
         with_id = with_id.filter(F.col("__id").isNotNull())
         deduped = latest_by_key(with_id, ["__id"], [self.order_col])
         rows = deduped.select(
+            F.lit(self.collection).alias("__table"),
             F.col("__id").alias("_id"),
             F.col("record_value").alias("doc"),
             # a null value is reachable only in delete mode
             F.when(F.col("record_value").isNull(), OP_DELETE)
             .otherwise(OP_UPSERT)
             .alias("__op"),
-        ).toLocalIterator(prefetchPartitions=True)
-        with transaction(
-            self.connection_factory, self._known_tables, [self.collection]
-        ) as conn:
-            if self.collection not in self._known_tables:
-                conn.cursor().execute(
-                    f'CREATE TABLE IF NOT EXISTS "{self.collection}" '
-                    '("_id" TEXT PRIMARY KEY, "doc" TEXT)'
-                )
-            write_changes(
-                conn.cursor(), rows, _SQL, self.collection, ["_id"], ["doc"], "__op"
-            )
+        )
+        write_batch(
+            self.connection_factory, rows.toLocalIterator(prefetchPartitions=True),
+            rows.columns, change_statements(_SQL, ["_id"], ["doc"]), "__table", "__op",
+            # idempotent DDL in the batch's transaction: a retry after a
+            # rollback that undid the CREATE issues it again
+            ensure=lambda conn, c: conn.cursor().execute(
+                f'CREATE TABLE IF NOT EXISTS "{c}" ("_id" TEXT PRIMARY KEY, "doc" TEXT)'
+            ),
+        )

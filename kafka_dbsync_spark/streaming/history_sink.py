@@ -13,10 +13,11 @@ table changes:
   key's still-open version in the target table;
 - replay idempotence: version rows upsert on PK ``(key…, valid_from)``,
   and the closing UPDATE is guarded with ``valid_from < first_change``
-  so replaying a batch never closes its own freshly-opened versions.
+  so replaying a batch never closes its own freshly-opened versions —
+  which also lets closes and version upserts run in any order.
 
-The dead-letter split, per-table fan-out, transaction, DDL and chunked
-writes are the base engine's (see ``streaming/apply.py``).
+The dead-letter split, the one streamed pass and transaction per batch,
+DDL and chunked writes are the base engine's (see ``streaming/apply.py``).
 
 Scale notes: the one shuffle is the per-key lead window — the same key
 partitioning as the merge path, so a pipeline feeding both sinks from
@@ -29,9 +30,10 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from kafka_dbsync_spark.operators.history import scd2_history
-from kafka_dbsync_spark.streaming.apply import CdcApplyEngine, executemany_chunked
+from kafka_dbsync_spark.streaming.apply import CdcApplyEngine
 
 _HISTORY_COLS = ("valid_from", "valid_to", "is_current")
 
@@ -75,21 +77,19 @@ class Scd2ApplyEngine(CdcApplyEngine):
             "valid_from", "valid_to",
             F.col("is_current").cast("int").alias("is_current"),
         )
+        stored = T.StructType([f for f in versions.schema if f.name != self.table_col])
         # first change per (table, key) closes the open version in
         # the target — min is partial-aggregated map-side
         closes = valid.groupBy(self.table_col, *self.pk_fields).agg(
             F.min(order).alias("__close_at")
         )
-        with self._fan_out(valid, versions, closes) as tables:
-            for table in tables:
-                self._apply_history_table(table, versions, closes)
+        rows = closes.withColumn(self.op_col, F.lit("close")).unionByName(
+            versions.withColumn(self.op_col, F.lit("version")),
+            allowMissingColumns=True,
+        )
+        self._write(rows, self._history_statements, stored, [*self.pk_fields, "valid_from"])
 
-    # -- per-table transaction ---------------------------------------------
-    def _apply_history_table(
-        self, table: str, versions: DataFrame, closes: DataFrame
-    ) -> None:
-        vdf = versions.filter(F.col(self.table_col) == table).drop(self.table_col)
-        cdf = closes.filter(F.col(self.table_col) == table).drop(self.table_col)
+    def _history_statements(self, table: str) -> dict:
         pk = self.pk_fields
         q, p = self.dialect.quote, self.dialect.placeholder
         where_pk = " AND ".join(f"{q(c)} = {p}" for c in pk)
@@ -100,18 +100,10 @@ class Scd2ApplyEngine(CdcApplyEngine):
             f"AND {q('valid_from')} < {p}"
         )
         cols = [*pk, *self.value_cols, *_HISTORY_COLS]
-        version_pk = [*pk, "valid_from"]
-        upsert = self.dialect.upsert_sql(table, cols, version_pk)
-        with self._transaction(table) as conn:
-            self._ensure_table(conn, table, vdf.schema, version_pk)
-            cur = conn.cursor()
-            # 1) close open versions for keys changed in this batch
-            executemany_chunked(cur, close_sql, (
-                (r["__close_at"], *[r[c] for c in pk], r["__close_at"])
-                for r in cdf.toLocalIterator(prefetchPartitions=True)
-            ))
-            # 2) upsert version rows (PK = key + valid_from → replay-safe)
-            executemany_chunked(cur, upsert, (
-                tuple(r[c] for c in cols)
-                for r in vdf.toLocalIterator(prefetchPartitions=True)
-            ))
+        upsert = self.dialect.upsert_sql(table, cols, [*pk, "valid_from"])
+        return {
+            # close open versions for keys changed in this batch
+            "close": (close_sql, ["__close_at", *pk, "__close_at"]),
+            # version rows (PK = key + valid_from → replay-safe)
+            "version": (upsert, cols),
+        }

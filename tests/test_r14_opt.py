@@ -95,6 +95,27 @@ def test_setsim_output_carries_no_string_arrays(spark):
     rows = {(r["id_a"], r["id_b"]): r["jaccard_bp"] for r in out.collect()}
     # sets: {abc,bcd,cde} vs {abc,bcd,cdf}: inter 2, union 4 -> 5000
     assert rows == {(1, 2): 5000}
+    # the executed plan: every mapInArrow input schema is string-free
+    inputs = [
+        n.child().schema().simpleString()
+        for n in _plan_nodes(out._jdf.queryExecution().executedPlan())
+        if n.nodeName() == "MapInArrow"
+    ]
+    assert inputs, "no MapInArrow node in the executed plan"
+    assert not any("array<string>" in s for s in inputs), inputs
+
+
+def _plan_nodes(node):
+    """Every node of an executed physical plan, through AQE wrappers and
+    query stages."""
+    yield node
+    if node.nodeName() == "AdaptiveSparkPlan":
+        yield from _plan_nodes(node.executedPlan())
+    if node.getClass().getSimpleName().endswith("QueryStageExec"):
+        yield from _plan_nodes(node.plan())
+    children = node.children()
+    for i in range(children.size()):
+        yield from _plan_nodes(children.apply(i))
 
 
 def test_bigram_lm_derived_c1_matches_direct_count(spark):
