@@ -16,6 +16,38 @@ from pyspark.sql import SparkSession
 DEFAULT_SHUFFLE_PARTITIONS = 32
 
 
+#: where a cgroup states this process's memory limit (v2, then v1)
+_CGROUP_MEMORY_LIMITS = (
+    "/sys/fs/cgroup/memory.max",
+    "/sys/fs/cgroup/memory/memory.limit_in_bytes",
+)
+
+
+def _memory_bytes() -> int:
+    """The memory this process may use: the host's physical memory, or its
+    cgroup's limit when that is lower (a container on a shared host)."""
+    total = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    for path in _CGROUP_MEMORY_LIMITS:
+        try:
+            with open(path) as f:
+                limit = f.read().strip()
+        except OSError:
+            continue
+        if limit.isdigit():  # v2 says "max" when there is no limit
+            total = min(total, int(limit))
+        break
+    return total
+
+
+def _default_driver_memory() -> str:
+    """``SPARK_DRIVER_MEMORY``, else 48g capped at half the memory the
+    process may use (``_memory_bytes``): a heap larger than that lets the
+    JVM grow past what the machine or container has before it collects."""
+    if "SPARK_DRIVER_MEMORY" in os.environ:
+        return os.environ["SPARK_DRIVER_MEMORY"]
+    return f"{min(48 * 1024, _memory_bytes() // 2**21)}m"
+
+
 def get_spark(
     app_name: str = "kafka-dbsync-spark",
     cpus: int | str | None = None,
@@ -42,7 +74,7 @@ def get_spark(
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "48g"))
+        .config("spark.driver.memory", _default_driver_memory())
         .config("spark.ui.enabled", "false")
         .config("spark.sql.parquet.filterPushdown", "true")
         # the driver's events.parquet stores TIMESTAMP(NANOS); Spark has no

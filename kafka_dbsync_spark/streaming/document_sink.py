@@ -17,9 +17,11 @@ any DB-API target holding ``(_id TEXT PRIMARY KEY, doc TEXT)`` — the
 collection's keyed replace/delete semantics are what is being
 engineered and tested; a real MongoDB client plugs in at the row
 writer (one bulk ReplaceOne/DeleteOne per chunk). Scale shape: one LWW
-dedup shuffle on _id (same as the CDC engine), then a driver-side
-single-writer stream in bounded chunks (the connector's tasks.max=1
-shape).
+dedup shuffle on _id (same as the CDC engine), then one Arrow collect
+written by a driver-side single writer in bounded chunks (the
+connector's tasks.max=1 shape). There is no executor path, so a batch
+must fit the driver-side limit (see ``streaming/apply.py``): its caller
+bounds the batch.
 
 This sink overrides only the ``_id`` extraction, the tombstone policy
 and the fixed collection DDL; the one-pass, one-transaction
@@ -35,7 +37,12 @@ from pyspark.sql import functions as F
 
 from kafka_dbsync_spark.functions.entrytype import OP_DELETE, OP_UPSERT
 from kafka_dbsync_spark.operators.merge import latest_by_key
-from kafka_dbsync_spark.streaming.apply import change_statements, write_batch
+from kafka_dbsync_spark.streaming.apply import (
+    arrow_rows,
+    change_statements,
+    collect_batch,
+    write_batch,
+)
 from kafka_dbsync_spark.streaming.dialects import SqliteDialect
 
 # replace = PostgreSQL-style ON CONFLICT upsert on _id, delete by _id
@@ -109,7 +116,7 @@ class DocumentApplyEngine:
             .alias("__op"),
         )
         write_batch(
-            self.connection_factory, rows.toLocalIterator(prefetchPartitions=True),
+            self.connection_factory, arrow_rows(collect_batch(rows)),
             rows.columns, change_statements(_SQL, ["_id"], ["doc"]), "__table", "__op",
             # idempotent DDL in the batch's transaction: a retry after a
             # rollback that undid the CREATE issues it again

@@ -16,14 +16,20 @@ table changes:
   so replaying a batch never closes its own freshly-opened versions —
   which also lets closes and version upserts run in any order.
 
-The dead-letter split, the one streamed pass and transaction per batch,
-DDL and chunked writes are the base engine's (see ``streaming/apply.py``).
+The dead-letter split, the one transaction per batch, DDL and chunked
+writes are the base engine's (see ``streaming/apply.py``). The batch is
+cached, because the dead-letter split, the versions and the closes all
+read it; the closes and versions are then collected as ONE Arrow table.
 
 Scale notes: the one shuffle is the per-key lead window — the same key
 partitioning as the merge path, so a pipeline feeding both sinks from
-one batch reuses the exchange. Versions stream through the driver
-bounded; at executor-side scale the same SQL ladder runs per partition
-(repartition by key keeps a key's versions + closure on one connection).
+one batch reuses the exchange. The driver holds a batch's closes and
+versions as Arrow and materialises Python rows CHUNK_ROWS at a time, so
+driver memory grows with the batch, not with the table. This sink has
+no executor path, so a batch must fit the driver-side limit (see
+``streaming/apply.py``): its caller bounds the batch. An executor path
+would run the same SQL ladder per partition (repartition by key keeps a
+key's versions + closure on one connection).
 """
 
 from __future__ import annotations
@@ -33,7 +39,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from kafka_dbsync_spark.operators.history import scd2_history
-from kafka_dbsync_spark.streaming.apply import CdcApplyEngine
+from kafka_dbsync_spark.streaming.apply import CdcApplyEngine, collect_batch
 
 _HISTORY_COLS = ("valid_from", "valid_to", "is_current")
 
@@ -55,8 +61,11 @@ class Scd2ApplyEngine(CdcApplyEngine):
                 "Scd2ApplyEngine writes driver-side; repartition-by-key "
                 "executor write is a straightforward extension"
             )
-        self._order_col()  # a config error fails before any write
-        super().apply_batch(batch_df, epoch_id)
+        order = self._order_col()  # a config error fails before any write
+        # the dead-letter split, the closes and the versions each read the
+        # batch
+        with self._persisted(batch_df) as cached:
+            self._apply_history(self._split_corrupt(cached), order)
 
     def _order_col(self) -> str:
         order_cols = self.order_cols or ["offset"]
@@ -64,8 +73,7 @@ class Scd2ApplyEngine(CdcApplyEngine):
             raise ValueError("history sink needs exactly one order column")
         return order_cols[0]
 
-    def _apply_valid(self, valid: DataFrame) -> None:
-        order = self._order_col()
+    def _apply_history(self, valid: DataFrame, order: str) -> None:
         keyed = valid.select(
             self.table_col, *self.pk_fields, *self.value_cols,
             self.op_col, order,
@@ -87,7 +95,10 @@ class Scd2ApplyEngine(CdcApplyEngine):
             versions.withColumn(self.op_col, F.lit("version")),
             allowMissingColumns=True,
         )
-        self._write(rows, self._history_statements, stored, [*self.pk_fields, "valid_from"])
+        self._write(
+            collect_batch(rows), self._history_statements, stored,
+            [*self.pk_fields, "valid_from"],
+        )
 
     def _history_statements(self, table: str) -> dict:
         pk = self.pk_fields
