@@ -90,17 +90,20 @@ def with_target_table(
 
     Supports the reference's `${TableName}` / `${topic}` templates
     (IidrCdcSinkTask.java:222-227) and table.name.case conversion
-    (IidrToJdbcSinkTransform.java:55-58).
+    (IidrToJdbcSinkTransform.java:55-58). Substitution is literal — Oracle
+    identifiers like ORDERS$1 are legal table names — and sequential:
+    `${TableName}` first, then `${topic}` in the result, so a name that
+    contains `${topic}` gets the topic too. A null name or topic
+    substitutes as the empty string.
     """
-    def literal(c: Column) -> Column:
-        # escape regex-replacement metacharacters ($ group refs, \)
-        # — Oracle identifiers like ORDERS$1 are legal table names
-        return F.regexp_replace(F.coalesce(c, F.lit("")), r"([\\$])", r"\\$1")
+    def substitute(expr: Column, placeholder: str, c: str) -> Column:
+        # literals built with F.lit: SQL text would run variable
+        # substitution, which turns '${TableName}' into ''
+        return F.replace(expr, F.lit(placeholder), F.coalesce(F.col(c), F.lit("")))
 
-    expr = F.lit(table_format)
-    expr = F.regexp_replace(expr, r"\$\{TableName\}", literal(F.col(table_col)))
+    expr = substitute(F.lit(table_format), "${TableName}", table_col)
     if topic_col in df.columns:
-        expr = F.regexp_replace(expr, r"\$\{topic\}", literal(F.col(topic_col)))
+        expr = substitute(expr, "${topic}", topic_col)
     if case == "lower":
         expr = F.lower(expr)
     elif case == "upper":

@@ -67,7 +67,7 @@ from kafka_dbsync_spark.operators.transforms import (
     with_target_table,
     coerce_fields,
 )
-from kafka_dbsync_spark.sources.iidr import events_as_iidr_stream
+from kafka_dbsync_spark.sources.iidr import events_as_iidr_stream, headers_map
 from kafka_dbsync_spark.sources.tables import load_table
 
 QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
@@ -195,9 +195,7 @@ def q_dlq_records(spark: SparkSession, sf_dir: str) -> DataFrame:
         value_col="record_value",
         partition_col="kafka_partition",
     )
-    hmap = F.map_from_entries(
-        F.expr("transform(headers, h -> struct(h.key, decode(h.value, 'UTF-8')))")
-    )
+    hmap = headers_map()
     return dlq.select(
         F.col("key").cast("string").alias("record_key"),
         F.col("value").cast("string").alias("record_value"),

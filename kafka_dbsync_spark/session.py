@@ -81,8 +81,8 @@ def get_spark(
         # nanosecond timestamp — read as long and convert in the loader
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         # Kafka allows duplicate header names; the reference keeps the last
-        # value (HeaderExtractor lastWithName). map_from_entries must match
-        # instead of throwing DUPLICATED_MAP_KEY.
+        # value (HeaderExtractor lastWithName). sources.iidr.headers_map
+        # must match instead of throwing DUPLICATED_MAP_KEY.
         .config("spark.sql.mapKeyDedupPolicy", "LAST_WIN")
     )
     for k, v in (extra_conf or {}).items():

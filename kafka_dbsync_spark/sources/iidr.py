@@ -22,7 +22,7 @@ identically in batch and streaming.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -42,6 +42,30 @@ IIDR_HEADERS_TYPE = T.ArrayType(
 REQUIRED_HEADERS = ("TableName", "A_ENTTYP")
 
 
+def headers_map() -> Column:
+    """The Kafka ``headers`` column, ``array<struct<key, value:binary>>``,
+    as a ``map<string, string>``.
+
+    ``map_from_arrays`` over the header names and the values cast to
+    ``array<string>``: no lambda, so it runs inside whole-stage codegen.
+    Duplicate names keep the last value (Kafka's ``lastWithName``) under
+    ``spark.sql.mapKeyDedupPolicy=LAST_WIN``, set by session.get_spark —
+    the default EXCEPTION policy would kill the query instead. A null
+    header array gives a null map, an empty one an empty map. The cast
+    keeps a value's bytes as they are; ``utf8`` makes one valid."""
+    return F.map_from_arrays(
+        F.col("headers.key"), F.col("headers.value").cast("array<string>")
+    )
+
+
+def utf8(c: Column) -> Column:
+    """Bytes → a valid UTF-8 string, each malformed sequence replaced by
+    U+FFFD, as Java's ``new String(bytes, UTF_8)`` decodes
+    (HeaderExtractor.java:43-45). A bare cast keeps malformed bytes, which
+    fail later where Python reads the string (an Arrow collect)."""
+    return F.make_valid_utf8(c.cast("string"))
+
+
 def decode_iidr_records(kafka_df: DataFrame) -> DataFrame:
     """Kafka-shaped DataFrame → typed IIDR columns.
 
@@ -49,31 +73,24 @@ def decode_iidr_records(kafka_df: DataFrame) -> DataFrame:
     headers array<struct<key,value:binary>>, topic, partition, offset,
     timestamp.
 
-    Output adds: record_key/record_value (UTF-8 strings), headers_map
-    (map<string,string>), table_name, entry_type, a_timstamp.
+    Output adds, in one projection: record_key/record_value (UTF-8
+    strings), headers_map (map<string,string>, see ``headers_map``),
+    table_name, entry_type, a_timstamp. Every string column but the map's
+    values is valid UTF-8 (see ``utf8``): a malformed byte never fails the
+    query, so it cannot stop a stream at its offset.
 
-    Parity: header extraction + UTF-8 decode = HeaderExtractor.java:26-48;
-    last-with-name semantics for duplicate header names rely on
-    ``spark.sql.mapKeyDedupPolicy=LAST_WIN`` (set by session.get_spark —
-    the default EXCEPTION policy would kill the query instead).
+    Parity: header extraction + UTF-8 decode = HeaderExtractor.java:26-48.
     """
-    with_map = (
-        kafka_df.withColumn("record_key", F.col("key").cast("string"))
-        .withColumn("record_value", F.col("value").cast("string"))
-        .withColumn(
-            "headers_map",
-            F.map_from_entries(
-                F.expr(
-                    "transform(headers, h -> struct(h.key as key,"
-                    " decode(h.value, 'UTF-8') as value))"
-                )
-            ),
-        )
-    )
-    return (
-        with_map.withColumn("table_name", F.col("headers_map")["TableName"])
-        .withColumn("entry_type", F.col("headers_map")["A_ENTTYP"])
-        .withColumn("a_timstamp", F.col("headers_map")["A_TIMSTAMP"])
+    hmap = headers_map()
+    return kafka_df.withColumns(
+        {
+            "record_key": utf8(F.col("key")),
+            "record_value": utf8(F.col("value")),
+            "headers_map": hmap,
+            "table_name": utf8(hmap["TableName"]),
+            "entry_type": utf8(hmap["A_ENTTYP"]),
+            "a_timstamp": utf8(hmap["A_TIMSTAMP"]),
+        }
     )
 
 

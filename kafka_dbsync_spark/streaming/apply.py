@@ -137,20 +137,61 @@ def collect_batch(df: DataFrame) -> pa.Table:
 
 
 def arrow_rows(table: pa.Table) -> Iterator[tuple]:
-    """The rows of ``table`` as tuples, converted one record batch of at
-    most CHUNK_ROWS rows at a time, so Python-object memory stays
-    O(CHUNK_ROWS). Values are what Spark's Rows hold (``collect``),
-    through Spark's own Arrow-to-Row conversion: pyarrow alone would give
-    tz-aware UTC datetimes for ``TimestampType`` (Rows: naive local time),
-    lists of pairs for maps (Rows: dicts) and dicts for structs (Rows:
-    Rows)."""
+    """The rows of ``table`` as tuples, built column by column from one
+    record batch of at most CHUNK_ROWS rows at a time, so Python-object
+    memory stays O(CHUNK_ROWS). Values are what Spark's Rows hold
+    (``collect``):
+
+    - string, integer, float and boolean columns convert in bulk through
+      numpy (``to_numpy().tolist()``); a column with nulls is filled first
+      and gets ``None`` back at its null positions, so an int64 never
+      passes through a float (which would corrupt values above 2**53);
+    - every other column (timestamp, date, decimal, binary, map, struct,
+      array) goes through Spark's own Arrow-to-Row conversion, on just
+      those columns: pyarrow alone would give tz-aware UTC datetimes for
+      ``TimestampType`` (Rows: naive local time), lists of pairs for maps
+      (Rows: dicts) and dicts for structs (Rows: Rows)."""
     import pyarrow as pa
 
     schema = from_arrow_schema(table.schema)
+    rest = [i for i, f in enumerate(table.schema) if not _is_flat(f.type)]
+    rest_schema = T.StructType([schema.fields[i] for i in rest])
     for batch in table.to_batches(max_chunksize=CHUNK_ROWS):
-        yield from ArrowTableToRowsConversion.convert(
-            pa.Table.from_batches([batch]), schema, return_as_tuples=True
-        )
+        if not batch.num_rows:
+            continue
+        cols = [None if i in rest else _flat_values(c) for i, c in enumerate(batch.columns)]
+        if rest:
+            converted = ArrowTableToRowsConversion.convert(
+                pa.Table.from_batches([batch.select(rest)]), rest_schema, return_as_tuples=True
+            )
+            for i, values in zip(rest, zip(*converted)):
+                cols[i] = values
+        yield from zip(*cols)
+
+
+def _is_flat(t: pa.DataType) -> bool:
+    """A type whose Python values numpy's ``tolist`` gives as Spark does."""
+    import pyarrow.types as pat
+
+    return (
+        pat.is_string(t) or pat.is_large_string(t) or pat.is_integer(t)
+        or pat.is_floating(t) or pat.is_boolean(t)
+    )
+
+
+def _flat_values(col: pa.Array) -> list:
+    """The Python values of a ``_is_flat`` column, ``None`` for nulls."""
+    import numpy as np
+    import pyarrow.types as pat
+
+    if not col.null_count or pat.is_string(col.type) or pat.is_large_string(col.type):
+        # a string column with nulls is an object array holding None
+        return col.to_numpy(zero_copy_only=False).tolist()
+    filled = col.fill_null(False if pat.is_boolean(col.type) else 0)
+    values = filled.to_numpy(zero_copy_only=False).tolist()
+    for i in np.flatnonzero(col.is_null().to_numpy(zero_copy_only=False)).tolist():
+        values[i] = None
+    return values
 
 
 # -- the write path shared by every DB-API sink ---------------------------------

@@ -10,7 +10,7 @@ Parity targets:
 - HeaderExtractor.java:26-48 (sink util): ``headers.lastWithName(name)``
   + ``new String(bytes, UTF_8)``; null headers / null header value → null.
 - IidrToJdbcSinkTransform.java:323 uses the same lastWithName rule.
-The Spark twin is map_from_entries under mapKeyDedupPolicy=LAST_WIN.
+The Spark twin is map_from_arrays under mapKeyDedupPolicy=LAST_WIN.
 """
 
 from __future__ import annotations
@@ -158,6 +158,73 @@ def test_full_chain_over_contract_fixture(contract_df):
     )
     state = {r["ID"]: r["V"] for r in apply_changes(changes, ["ID"], ["seq"]).collect()}
     assert state == {1: "one", 2: "two-v2"}  # 3 deleted, 2 updated by UP
+
+
+def test_header_edge_cases_decode_and_batch_completes(spark, tmp_path):
+    """Header values decode the way Java's ``new String(bytes, UTF_8)``
+    does: a malformed byte becomes U+FFFD instead of failing the query (a
+    failure would recur at the same offset on every restart), in headers
+    and in record values alike. Pinned with it: duplicate names (last
+    wins), a null header value, and null and empty header arrays. The
+    batch then applies end to end, dead letters included."""
+    import functools
+    import sqlite3
+    from contextlib import closing
+
+    from kafka_dbsync_spark.streaming.apply import CdcApplyEngine
+    from kafka_dbsync_spark.streaming.dialects import SqliteDialect
+
+    records = [
+        rec(0, 0, {"ID": 1}, {"ID": 1, "V": "one"},
+            [("TableName", b"OR\xffDERS"), h("A_ENTTYP", "PT")]),
+        rec(0, 1, {"ID": 2}, {"ID": 2, "V": "two"},
+            [h("TableName", "ORDERS"), h("A_ENTTYP", "PT"), h("A_ENTTYP", "UP")]),
+        rec(0, 2, {"ID": 3}, {"ID": 3}, [h("TableName", None), h("A_ENTTYP", "PT")]),
+        rec(0, 3, {"ID": 4}, {"ID": 4}, None),
+        rec(0, 4, {"ID": 5}, {"ID": 5}, []),
+        # a dead letter whose value holds a malformed byte
+        (b'{"ID": 6}', b'{"ID": 6, "V": "\xff"}', TOPIC, 0, 5, TS, 0,
+         [h("TableName", "ORDERS"), h("A_ENTTYP", "XX")]),
+    ]
+    df = spark.createDataFrame(records, KAFKA_CONTRACT_SCHEMA)
+    decoded = {r["offset"]: r for r in decode_iidr_records(df).collect()}
+    assert decoded[0]["table_name"] == "OR\ufffdDERS"
+    assert decoded[1]["entry_type"] == "UP"
+    assert decoded[2]["headers_map"] == {"TableName": None, "A_ENTTYP": "PT"}
+    assert decoded[2]["table_name"] is None and decoded[2]["entry_type"] == "PT"
+    assert decoded[3]["headers_map"] is None
+    assert decoded[4]["headers_map"] == {}
+    for off in (3, 4):
+        assert (decoded[off]["table_name"], decoded[off]["entry_type"]) == (None, None)
+
+    db = str(tmp_path / "t.db")
+    engine = CdcApplyEngine(
+        connection_factory=functools.partial(sqlite3.connect, db),
+        dialect=SqliteDialect(),
+        pk_fields=["ID"],
+        value_cols=["V"],
+        order_cols=["offset"],
+        errors_tolerance="all",
+        corrupt_table="dlq",
+        distribute=False,
+    )
+    row = F.from_json("record_value", "ID LONG, V STRING")
+    chained = validate_iidr(with_operation(with_target_table(decode_iidr_records(df))))
+    engine.apply_batch(chained.select(
+        row["ID"].alias("ID"), row["V"].alias("V"), "target_table", "op", "offset",
+        F.col("offset").alias("kafka_offset"), "topic", "record_key", "record_value",
+        "table_name", "entry_type", "error_reason",
+    ))
+    with closing(sqlite3.connect(db)) as conn:
+        assert conn.execute('SELECT ID, V FROM "OR\ufffdDERS"').fetchall() == [(1, "one")]
+        assert conn.execute('SELECT ID, V FROM "ORDERS"').fetchall() == [(2, "two")]
+        dead = conn.execute("SELECT kafka_offset, error_reason, record_value FROM dlq ORDER BY 1")
+        assert dead.fetchall() == [
+            (2, "missing required header: TableName", '{"ID": 3}'),
+            (3, "missing required header: TableName", '{"ID": 4}'),
+            (4, "missing required header: TableName", '{"ID": 5}'),
+            (5, "unknown entry type: XX", '{"ID": 6, "V": "\ufffd"}'),
+        ]
 
 
 def test_dead_letter_records_kafka_shape(contract_df):

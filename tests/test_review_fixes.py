@@ -38,6 +38,20 @@ def test_table_name_with_metacharacters(spark):
     assert got == ["dst_ORDERS$1", "dst_T\\AUDIT", "dst_"]
 
 
+def test_table_name_then_topic_substitution(spark):
+    """`${TableName}` is substituted first and `${topic}` in the result, so
+    a name that contains `${topic}` gets the topic; both substitute
+    literally, and a null topic substitutes as the empty string."""
+    df = spark.createDataFrame(
+        [("X${topic}", "tp"), ("ORDERS$1", "a\\$2"), ("T", None)],
+        "table_name string, topic string",
+    )
+    got = [r["target_table"] for r in with_target_table(df).collect()]
+    assert got == ["Xtp", "ORDERS$1", "T"]
+    got = [r["target_table"] for r in with_target_table(df, "${topic}.${TableName}").collect()]
+    assert got == ["tp.Xtp", "a\\$2.ORDERS$1", ".T"]
+
+
 def test_dedup_exact_null_text_not_collapsed(spark):
     df = spark.createDataFrame(
         [(1, "same"), (2, "same"), (3, None), (4, None), (5, None)],

@@ -415,7 +415,9 @@ def test_typed_values_match_row_path(tmp_path, spark, cls, monkeypatch):
 
 def test_arrow_rows_match_collect(spark, monkeypatch):
     """``arrow_rows`` gives what ``collect`` gives, for the types where
-    pyarrow's own values differ (timestamps, maps, structs), batch by
+    pyarrow's own values differ (timestamps, maps, structs) and for the
+    columns it converts through numpy (integers above 2**53 with nulls,
+    doubles with NaN and nulls, strings and booleans with nulls), batch by
     batch of CHUNK_ROWS."""
     monkeypatch.setattr(apply, "CHUNK_ROWS", 2)
     df = spark.sql(
@@ -426,12 +428,20 @@ def test_arrow_rows_match_collect(spark, monkeypatch):
                   named_struct('a', id, 'b', CAST(id AS string)) AS s,
                   array(named_struct('key', 'h', 'value', CAST('x' AS binary))) AS hs,
                   CAST(id AS decimal(20, 3)) AS dec,
-                  IF(id = 2, NULL, CAST('raw' AS binary)) AS raw
+                  IF(id = 2, NULL, CAST('raw' AS binary)) AS raw,
+                  IF(id = 1, NULL, 9007199254740993 + id) AS big,
+                  CASE id WHEN 0 THEN CAST('NaN' AS double) WHEN 3 THEN NULL
+                          ELSE id / 3 END AS dbl,
+                  IF(id % 2 = 0, NULL, concat('s', id)) AS str,
+                  IF(id = 4, NULL, id % 2 = 0) AS flag
            FROM range(5)"""
     )
     got = list(apply.arrow_rows(df.toArrow()))
-    assert got == [tuple(r) for r in df.collect()]
+    nan_free = lambda rows: [tuple("NaN" if v != v else v for v in r) for r in rows]  # noqa: E731
+    assert nan_free(got) == nan_free(tuple(r) for r in df.collect())
     assert got[0][1].tzinfo is None and isinstance(got[0][3], dict)
+    assert got[0][8] == 9007199254740993 and type(got[0][8]) is int and got[1][8] is None
+    assert type(got[1][11]) is bool and got[4][11] is None
 
 
 @pytest.fixture
