@@ -117,6 +117,26 @@ CHUNK_ROWS = 10_000
 _DEAD = "__dead_letter_id"
 
 
+def _dead_letter_sql(field: T.StructField) -> str:
+    """SQL for the value a dead-letter column stores. A DB-API driver binds
+    no nested value, so the Kafka ``headers`` (``array<struct<key,
+    value>>``, as ``decode_iidr_records`` leaves them) are stored as a JSON
+    object of header name → value, as the reference serializes them
+    (CorruptEventWriter.java:128-158), each value made valid UTF-8 first
+    as the decode path makes its headers (a malformed byte would fail the
+    Arrow collect). Every other column is stored as it is."""
+    c = quote_ident(field.name)
+    t = field.dataType
+    if not (
+        isinstance(t, T.ArrayType)
+        and isinstance(t.elementType, T.StructType)
+        and t.elementType.fieldNames() == ["key", "value"]
+    ):
+        return c
+    values = f"transform({c}.value, v -> make_valid_utf8(CAST(v AS string)))"
+    return f"to_json(map_from_arrays({c}.key, {values}))"
+
+
 def collect_batch(df: DataFrame) -> pa.Table:
     """``df`` collected to the driver as ONE Arrow table, in one job. Its
     serialized result must fit ``spark.driver.maxResultSize``; a larger
@@ -452,7 +472,10 @@ class CdcApplyEngine:
         dead = F.col("error_reason").isNotNull()
         corrupt = batch_df.filter(dead)
         if self.corrupt_table:
-            self._dead_letter(collect_batch(corrupt.select(dead_cols)))
+            self._dead_letter(collect_batch(corrupt.selectExpr(*(
+                f"{_dead_letter_sql(batch_df.schema[c])} AS {quote_ident(c)}"
+                for c in dead_cols
+            ))))
         else:
             self._tolerate(corrupt.count())
         return batch_df.filter(~dead)
@@ -523,7 +546,8 @@ class CdcApplyEngine:
         ``dead_cols``, plus the order columns and a dead-letter id.
 
         Only what is written is shuffled: the write's columns, the order
-        columns and the ``dead_cols``, the latter nulled on valid rows.
+        columns and the ``dead_cols`` (as ``_dead_letter_sql`` stores
+        them), the latter nulled on valid rows.
         Each dead-letter row (non-null ``error_reason``) is a group of one:
         its group key adds a per-record id that is null on valid rows.
         ``max_by`` orders by a struct of the order columns, which is never
@@ -541,7 +565,7 @@ class CdcApplyEngine:
             *map(q, data_cols),
             *[q(c) for c in order_cols if c not in data_cols],
             *[
-                f"IF({dead}, {q(c)}, NULL) AS {q(c)}"
+                f"IF({dead}, {_dead_letter_sql(df.schema[c])}, NULL) AS {q(c)}"
                 for c in dead_cols
                 if c not in data_cols and c not in order_cols
             ],

@@ -30,6 +30,8 @@ from kafka_dbsync_spark.operators.transforms import (
     with_target_table,
 )
 from kafka_dbsync_spark.sources.iidr import IIDR_HEADERS_TYPE, decode_iidr_records
+from kafka_dbsync_spark.streaming.apply import CdcApplyEngine
+from kafka_dbsync_spark.streaming.history_sink import Scd2ApplyEngine
 
 # the exact source schema of spark-sql-kafka with includeHeaders=true
 KAFKA_CONTRACT_SCHEMA = T.StructType(
@@ -225,6 +227,47 @@ def test_header_edge_cases_decode_and_batch_completes(spark, tmp_path):
             (4, "missing required header: TableName", '{"ID": 5}'),
             (5, "unknown entry type: XX", '{"ID": 6, "V": "\ufffd"}'),
         ]
+
+
+@pytest.mark.parametrize("engine_cls", [CdcApplyEngine, Scd2ApplyEngine], ids=["cdc", "scd2"])
+def test_dead_letter_headers_stored_as_json(spark, tmp_path, engine_cls):
+    """The decoded frame keeps the Kafka ``headers`` array, which the
+    dead-letter table lists: a dead letter stores it as a JSON object of
+    header name to value (CorruptEventWriter.java:128-158), each value
+    valid UTF-8, instead of failing the batch on a nested value sqlite
+    cannot bind. Both dead-letter paths: the one-query driver path (CDC)
+    and the split of a cached batch (SCD2)."""
+    import functools
+    import sqlite3
+    from contextlib import closing
+
+    from kafka_dbsync_spark.streaming.dialects import SqliteDialect
+
+    df = spark.createDataFrame([
+        rec(0, 0, {"ID": 1}, {"ID": 1, "V": "one"}, [h("TableName", "ORDERS"), h("A_ENTTYP", "PT")]),
+        rec(0, 1, {"ID": 2}, {"ID": 2, "V": "two"},
+            [h("TableName", "ORDERS"), h("A_ENTTYP", "XX"), ("NOTE", b"b\xffd"), h("Q", 'a"b')]),
+        rec(0, 2, {"ID": 3}, {"ID": 3}, None),
+    ], KAFKA_CONTRACT_SCHEMA)
+    row = F.from_json("record_value", "ID LONG, V STRING")
+    chained = validate_iidr(with_operation(with_target_table(decode_iidr_records(df))))
+    db = str(tmp_path / "t.db")
+    engine_cls(
+        connection_factory=functools.partial(sqlite3.connect, db),
+        dialect=SqliteDialect(),
+        pk_fields=["ID"],
+        value_cols=["V"],
+        order_cols=["offset"],
+        errors_tolerance="all",
+        corrupt_table="dlq",
+        distribute=False,
+    ).apply_batch(chained.withColumns({"ID": row["ID"], "V": row["V"]}))
+    with closing(sqlite3.connect(db)) as conn:
+        dead = conn.execute("SELECT entry_type, headers FROM dlq ORDER BY record_key").fetchall()
+    assert dead == [
+        ("XX", '{"TableName":"ORDERS","A_ENTTYP":"XX","NOTE":"b\ufffdd","Q":"a\\"b"}'),
+        (None, None),
+    ]
 
 
 def test_dead_letter_records_kafka_shape(contract_df):

@@ -22,3 +22,20 @@ def test_default_driver_memory_respects_cgroup_limit(tmp_path, monkeypatch):
     assert session._default_driver_memory() == f"{min(48 * 1024, physical // 2**21)}m"
     monkeypatch.setenv("SPARK_DRIVER_MEMORY", "2g")
     assert session._default_driver_memory() == "2g"
+
+
+def test_checkpoint_file_manager_default_loads(spark, tmp_path):
+    """Every session checkpoints through Spark's ``FileSystem``-based
+    manager: the key is set, the class loads in the session's JVM, and
+    Spark's factory builds it from the session's Hadoop conf. Spark 4.1
+    moved the managers into ``...streaming.checkpointing``, so a future
+    move fails here rather than in every streaming query."""
+    jvm = spark._jvm
+    assert spark.conf.get(session.CHECKPOINT_FILE_MANAGER_KEY) == session.CHECKPOINT_FILE_MANAGER
+    jvm.java.lang.Class.forName(session.CHECKPOINT_FILE_MANAGER)
+    manager = jvm.org.apache.spark.sql.execution.streaming.checkpointing.CheckpointFileManager
+    built = manager.create(
+        jvm.org.apache.hadoop.fs.Path(str(tmp_path)),
+        spark._jsparkSession.sessionState().newHadoopConf(),
+    )
+    assert built.getClass().getName() == session.CHECKPOINT_FILE_MANAGER

@@ -12,7 +12,9 @@ merge.
 from __future__ import annotations
 
 import json
+import os
 import sqlite3
+import uuid
 
 import pyspark.sql.functions as F
 import pytest
@@ -149,6 +151,61 @@ def test_stream_apply_and_recovery(spark, kafka_schema, rig):
     con.close()
     assert n_dlq == 1
 
+
+def _temp_files(ckpt):
+    return sorted(
+        os.path.relpath(os.path.join(d, f), ckpt)
+        for d, _, files in os.walk(ckpt) for f in files if ".tmp" in f
+    )
+
+
+def test_replay_after_crash_before_commit_log(spark, kafka_schema, rig):
+    """A crash after the sink's transaction commits but before the commit
+    log's ``commits/N`` lands (the checkpoint manager writes a temp file
+    and renames it, so the file is whole or absent): the restart applies
+    batch N again. The data tables end as they were, because the keyed
+    upsert and delete are idempotent. The dead-letter table is an append,
+    so it is at-least-once: batch N's dead letters are written twice.
+    An orphan temp file from an interrupted write is ignored."""
+    src, db, start = rig
+    ckpt = os.path.join(os.path.dirname(src), "ckpt")
+    write_batch(spark, kafka_schema, src, canonical())
+    q = start()
+    q.processAllAvailable()
+    write_batch(spark, kafka_schema, src, [
+        kafka_record(5, {"ID": 1}, {"ID": 1, "ORDER_NAME": "A2", "STATUS": "PAID"},
+                     TableName="TEST_ORDERS", A_ENTTYP="UP"),
+        kafka_record(6, {"ID": 2}, None, TableName="TEST_ORDERS", A_ENTTYP="DR"),
+        kafka_record(7, {"ID": 9}, {"ID": 9}, TableName="TEST_ORDERS", A_ENTTYP="XX"),
+    ])
+    q.processAllAvailable()
+    q.stop()
+    assert _temp_files(ckpt) == []  # a clean run leaves no temp file
+    assert table_state(db, "test_orders") == [(1, "A2", "PAID")]
+
+    # the crash window: batch 1 applied, its commit log entry never written
+    commits = os.path.join(ckpt, "commits")
+    os.remove(os.path.join(commits, "1"))
+    os.remove(os.path.join(commits, ".1.crc"))
+    orphan = os.path.join("offsets", f".1.{uuid.uuid4()}.tmp")
+    with open(os.path.join(ckpt, orphan), "w") as f:
+        f.write("v1\n{")  # a torn write
+
+    q2 = start()
+    q2.processAllAvailable()
+    q2.stop()
+    replayed = [p["batchId"] for p in q2.recentProgress if p["numInputRows"]]
+    assert replayed == [1]
+    assert os.path.exists(os.path.join(commits, "1"))
+    assert table_state(db, "test_orders") == [(1, "A2", "PAID")]
+    con = sqlite3.connect(db)
+    try:
+        assert con.execute('SELECT count(*) FROM "test_orders"').fetchone()[0] == 1
+        dlq = con.execute('SELECT "entry_type" FROM "corrupt_events"').fetchall()
+    finally:
+        con.close()
+    assert dlq == [("XX",), ("XX",)]
+    assert _temp_files(ckpt) == [orphan]
 
 def test_stream_multi_table_fanout(tmp_path, spark, kafka_schema):
     """One stream routed into two tables (K14 single-query variant)."""
