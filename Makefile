@@ -10,7 +10,7 @@ PYSPARK_VERSION ?= $(shell python3 -c "import pyspark; print(pyspark.__version__
 KAFKA_PACKAGE    = org.apache.spark:spark-sql-kafka-0-10_2.13:$(PYSPARK_VERSION)
 COMPOSE          = docker compose -f deployment/kafka/docker-compose.yaml
 
-.PHONY: kafka-up kafka-down kafka-live-test test nightly sinks perfbench-smoke bench
+.PHONY: kafka-up kafka-down kafka-live-test test nightly sinks artifacts perfbench-smoke bench
 
 kafka-up:
 	$(COMPOSE) up -d --wait
@@ -39,6 +39,16 @@ sinks:
 	  tests/test_sink_write_path.py tests/test_distributed_apply.py \
 	  tests/test_history_sink.py tests/test_document_sink.py \
 	  tests/test_streaming_extras.py tests/test_review_fixes.py
+
+# the persisted-index suites (marker, generation and fsck protocol of
+# operators/epoch_log.py and the seven index families), nightly included
+artifacts:
+	python -m pytest -m "" -q -p no:cacheprovider tests/test_epoch_log.py \
+	  tests/test_index_check.py tests/test_fsck_golden.py \
+	  tests/test_pq_index.py tests/test_bm25_index.py \
+	  tests/test_dedup_index.py tests/test_lm_index.py tests/test_nb_index.py \
+	  tests/test_decontam_index.py tests/test_boilerplate_index.py \
+	  tests/test_cache_validation.py tests/test_erasure.py
 
 # the CDC benchmark's own tests, at smoke size
 perfbench-smoke:

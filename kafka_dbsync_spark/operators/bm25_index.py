@@ -26,10 +26,11 @@ marker's corpus stats folded in as literals. Build/serve are
 arithmetic-identical by construction, so the served query reuses
 ``bm25_search``'s DuckDB oracle unchanged.
 
-Publish / staleness / concurrency discipline is ``lm_index.py``'s
-verbatim (``publish_generation`` immutable generation dirs, atomic
-staging rename, marker-flips-last; ``lm_model_is_current`` metadata-
-only staleness on the happy path). The fingerprint is the plain
+Publish / concurrency discipline is the generation protocol of
+``operators/epoch_log.py`` (``publish_generation``: immutable
+generation dirs, atomic staging rename, marker-flips-last), and
+staleness is ``lm_index.lm_model_is_current`` (metadata-only on the
+happy path). The fingerprint is the plain
 corpus fingerprint — a BM25 index depends only on (id, text).
 
 Incremental growth is Lucene's actual model — SEGMENTS: a new shard of
@@ -98,11 +99,20 @@ from pyspark.sql import functions as F
 
 from kafka_dbsync_spark.functions.text import normalize_text
 from kafka_dbsync_spark.operators.epoch_log import (
+    _COMPLETE,
     _INGEST,
+    CheckReport,
     _ingest_committed,
+    check_dirs_exist,
+    check_marker,
     commit,
     epoch_dir,
+    gen_name,
+    live_marker,
+    publish_dir,
+    publish_generation,
     read_marker,
+    sweep_leftovers,
     write_marker,
 )
 from kafka_dbsync_spark.operators.id_digest import (
@@ -120,11 +130,8 @@ from kafka_dbsync_spark.operators.id_digest import (
     probe_positions,
 )
 from kafka_dbsync_spark.operators.lm_index import (
-    _MARKER,
-    _gen_name,
     corpus_fingerprint,
     lm_model_is_current,
-    publish_generation,
 )
 
 #: number of term-hash partition buckets in the postings layout. A
@@ -508,7 +515,7 @@ def build_bm25_index(
     src_path: str | None = None,
 ) -> None:
     """One tokenize pass → a single-segment index published with the
-    shared atomic-generation protocol (``lm_index.publish_generation``);
+    shared atomic-generation protocol (``epoch_log.publish_generation``);
     corpus stats (N, Σdl) and the live-segment list land in the
     marker."""
     from kafka_dbsync_spark.operators.cache_validation import files_signature
@@ -517,7 +524,7 @@ def build_bm25_index(
     # the layout version participates in every immutable dir name: a
     # v1 dir with the same fingerprint must never satisfy a v2 build's
     # "already published" check
-    gen = _gen_name(fp) + f"_v{FORMAT}"
+    gen = gen_name(fp) + f"_v{FORMAT}"
     write_stage, (n, sumdl), schemas, digest, id_stats = _segment_writer(
         spark, docs, id_col, text_col
     )
@@ -546,14 +553,7 @@ def _live_meta(path: str, what: str = "BM25 index") -> dict:
     """Marker record of a servable index; every referenced segment dir
     must exist (readers only ever see complete views — the marker flips
     last on build/add/merge)."""
-    marker = os.path.join(path, _MARKER)
-    try:
-        with open(marker) as f:
-            meta = json.load(f)
-    except (OSError, ValueError) as e:
-        raise ValueError(
-            f"no complete {what} at {path}; build_bm25_index first."
-        ) from e
+    meta = live_marker(path, what, "build_bm25_index")
     if meta.get("format") != FORMAT:
         raise ValueError(
             f"{what} at {path} has layout format "
@@ -809,7 +809,7 @@ def bm25_index_add(
     would fail at serve/merge time, far from the add that caused it."""
     meta = _live_meta(path)
     shard_fp = corpus_fingerprint(shard, id_col, text_col)
-    seg = "seg" + _gen_name(shard_fp)[3:] + f"_v{FORMAT}"
+    seg = "seg" + gen_name(shard_fp)[3:] + f"_v{FORMAT}"
     if seg in meta["segments"]:
         raise ValueError(
             f"shard {seg!r} is already a live segment of {path}"
@@ -839,19 +839,10 @@ def _publish_segment(
     stage + rename (a rename loser discards its identical copy), then
     fold the segment's stats, digest and fingerprint into the marker
     LAST."""
-    import shutil
-
     from kafka_dbsync_spark.operators.cache_validation import invalidate_memo
 
-    final_dir = os.path.join(path, seg)
     invalidate_memo(path)
-    if not os.path.exists(final_dir):
-        stage = os.path.join(path, f".stage-{seg}-{os.getpid()}")
-        write_stage(stage)
-        try:
-            os.rename(stage, final_dir)
-        except OSError:
-            shutil.rmtree(stage, ignore_errors=True)
+    publish_dir(path, seg, write_stage)
     rec = dict(
         meta,
         fingerprint=_combine_fp(meta["fingerprint"], shard_fp),
@@ -868,7 +859,7 @@ def _publish_segment(
     # any single source directory, so staleness falls back to the
     # exact fingerprint tier
     rec.pop("src_sig", None)
-    write_marker(os.path.join(path, _MARKER), rec)
+    write_marker(os.path.join(path, _COMPLETE), rec)
 
 
 def bm25_ingest_foreach_batch(
@@ -1041,7 +1032,7 @@ def bm25_index_remove(
         removed_n=meta.get("removed_n", 0) + len(new),
         removed_sumdl=meta.get("removed_sumdl", 0) + sum(found.values()),
     )
-    write_marker(os.path.join(path, _MARKER), rec)
+    write_marker(os.path.join(path, _COMPLETE), rec)
     return {"removed": len(new), "already": len(already)}
 
 
@@ -1128,7 +1119,7 @@ def bm25_segment_merge(
     # differ by n even on a digest collision of their id lists
     merged = (
         "merged"
-        + _gen_name(meta["fingerprint"])[3:]
+        + gen_name(meta["fingerprint"])[3:]
         + f"_v{FORMAT}_n{meta['n'] - meta.get('removed_n', 0)}"
         + (
             ""
@@ -1143,9 +1134,9 @@ def bm25_segment_merge(
             else ""
         )
     )
-    final_dir = os.path.join(path, merged)
     invalidate_memo(path)
-    if not os.path.exists(final_dir):
+
+    def write_stage(stage: str) -> None:
         post, lens = None, None
         for s in segs:
             p = _read_table(spark, meta, path, s, "postings")
@@ -1155,7 +1146,6 @@ def bm25_segment_merge(
         if rm_in:
             post = post.filter(~F.col(id_col).isin(rm_in))
             lens = lens.filter(~F.col(id_col).isin(rm_in))
-        stage = os.path.join(path, f".stage-{merged}-{os.getpid()}")
         # scale guard (guide §6 small files): the N-segment union would
         # leave N files per bucket in the MERGED segment — a merge is a
         # compaction, so once the union's task count exceeds the bucket
@@ -1176,10 +1166,8 @@ def bm25_segment_merge(
             F.count(F.lit(1)).alias("df")
         ).write.partitionBy("bucket").mode("overwrite").parquet(f"{stage}/dfs")
         lens.write.mode("overwrite").parquet(f"{stage}/doclens")
-        try:
-            os.rename(stage, final_dir)
-        except OSError:
-            shutil.rmtree(stage, ignore_errors=True)
+
+    final_dir = publish_dir(path, merged, write_stage)
     # EXACT digest of the merged segment (tombstones in the subset are
     # physically out now): one narrow aggregate over the published
     # doclens, amortized into a rewrite that just rebuilt those files —
@@ -1262,7 +1250,7 @@ def bm25_segment_merge(
         # long-running ingest + tiered-merge scenario.
         if meta.get("gen") in set(segs):
             rec["gen"] = merged
-    write_marker(os.path.join(path, _MARKER), rec)
+    write_marker(os.path.join(path, _COMPLETE), rec)
     # Deferred retirement (ADVICE r10): a reader that resolved the
     # marker just BEFORE this flip still holds lazy DataFrames over the
     # retiring dirs, so deleting them here would yank parquet out from
@@ -1367,7 +1355,7 @@ def _segment_sizes(
             digs[s] = d
         meta["segstats"] = stats
         meta["segdigests"] = digs
-        write_marker(os.path.join(path, _MARKER), meta)
+        write_marker(os.path.join(path, _COMPLETE), meta)
         invalidate_memo(path)
     return {s: int(stats[s][0]) for s in meta["segments"]}
 
@@ -1389,7 +1377,7 @@ def bm25_index_is_current(
     stale regardless of fingerprint, so callers rebuild instead of
     reading a layout this code can't serve (e.g. pre-positional
     postings)."""
-    if (read_marker(os.path.join(path, _MARKER)) or {}).get("format") != FORMAT:
+    if (read_marker(os.path.join(path, _COMPLETE)) or {}).get("format") != FORMAT:
         return False
     return lm_model_is_current(
         docs,
@@ -1437,24 +1425,11 @@ def bm25_index_check(
     Like Lucene's tool this is an OPERATOR'S instrument: the full level
     deliberately reads the whole index (that is what an fsck is); the
     metadata level is safe to run on every serve path."""
-    rows: list[tuple] = []
-
-    def add(check: str, seg: str, ok, detail: str = "") -> None:
-        rows.append((check, seg, "PASS" if ok is True else ok, detail))
-
-    def report() -> DataFrame:
-        return spark.createDataFrame(
-            rows, "check string, segment string, status string, detail string"
-        )
-
-    marker = os.path.join(path, _MARKER)
-    try:
-        with open(marker) as f:
-            meta = json.load(f)
-    except (OSError, ValueError) as e:
-        add("marker_parses", "", "FAIL", f"{e}")
-        return report()
-    add("marker_parses", "", True)
+    rows = CheckReport()
+    add = rows.add
+    meta = check_marker(rows, path)
+    if meta is None:
+        return rows.frame(spark, "segment")
     add(
         "layout_format",
         "",
@@ -1464,15 +1439,12 @@ def bm25_index_check(
     segs = meta.get("segments") or ([meta["gen"]] if meta.get("gen") else [])
     if not segs:
         add("segments_listed", "", "FAIL", "marker names no live segment")
-        return report()
-    for s in segs:
-        there = os.path.isdir(os.path.join(path, s))
-        add(
-            "segment_dir_exists",
-            s,
-            there or "FAIL",
-            "" if there else "marker references a missing dir — a reader would throw",
-        )
+        return rows.frame(spark, "segment")
+    check_dirs_exist(
+        rows, path, segs,
+        "marker references a missing dir — a reader would throw",
+        check="segment_dir_exists",
+    )
     stats = meta.get("segstats") or {}
     missing = [s for s in segs if s not in stats]
     add(
@@ -1517,36 +1489,17 @@ def bm25_index_check(
         (len(removed) == int(meta.get("removed_n", 0))) or "FAIL",
         f"{len(removed)} removed_ids vs removed_n={meta.get('removed_n', 0)}",
     )
-    live = set(segs)
-    for entry in sorted(os.listdir(path)):
-        p = os.path.join(path, entry)
-        if entry == _MARKER or entry == "ingest" or entry in live or not os.path.isdir(p):
-            continue
-        if entry.startswith(".retired-"):
-            add(
-                "retired_dir",
-                entry,
-                "WARN",
-                "reader-grace trash from a merge; the next merge reclaims it",
-            )
-        elif entry.startswith("."):
-            add(
-                "staging_leftover",
-                entry,
-                "WARN",
-                "in-flight or crashed staging dir; safe to reclaim when no "
-                "builder is running",
-            )
-        else:
-            add(
-                "orphan_dir",
-                entry,
-                "WARN",
-                "immutable dir the marker does not reference (publish-race "
-                "loser or superseded generation): never served, reclaimable",
-            )
+    sweep_leftovers(
+        rows, path, keep={_INGEST, *segs},
+        retired="reader-grace trash from a merge; the next merge reclaims it",
+        orphan=(
+            "orphan_dir",
+            "immutable dir the marker does not reference (publish-race "
+            "loser or superseded generation): never served, reclaimable",
+        ),
+    )
     if not full:
-        return report()
+        return rows.frame(spark, "segment")
 
     lens_all = None
     for s in segs:
@@ -1671,7 +1624,7 @@ def bm25_index_check(
                 "doclens (they leave only via a merge; fewer means the "
                 "marker carries tombstones for ids that never existed)",
             )
-    return report()
+    return rows.frame(spark, "segment")
 
 
 def bm25_search_served(

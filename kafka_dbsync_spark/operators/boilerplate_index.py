@@ -21,7 +21,8 @@ The mining PARAMETERS are part of the model identity: the same corpus
 mined at 25% and at 75% yields different key sets, so the params ride
 in both the fingerprint (staleness compares them) and the generation
 dir name (two param settings never share an immutable dir). Publish /
-staleness / concurrency is the shared ``lm_index`` protocol.
+concurrency is the generation protocol of ``operators/epoch_log.py``;
+staleness is ``lm_index.lm_model_is_current``.
 
 Application (:func:`boilerplate_strip_served`) replays the batch
 operator's exact candidate derivation (same split, same
@@ -46,12 +47,18 @@ from kafka_dbsync_spark.operators.dedup import (
     _strip_by_keys,
     mine_boilerplate_keys,
 )
+from kafka_dbsync_spark.operators.epoch_log import (
+    _COMPLETE,
+    gen_name,
+    generation_check,
+    generation_dir,
+    live_generation,
+    publish_generation,
+    read_marker,
+)
 from kafka_dbsync_spark.operators.lm_index import (
-    _MARKER,
-    _gen_name,
     corpus_fingerprint,
     lm_model_is_current,
-    publish_generation,
 )
 
 
@@ -75,7 +82,7 @@ def _param_key(min_frac_pct: int, min_docs: int, sep: str) -> str:
 
 def _bp_gen(fp: dict, min_frac_pct: int, min_docs: int, sep: str) -> str:
     return (
-        _gen_name(fp)
+        gen_name(fp)
         + f"_p{min_frac_pct}_{min_docs}_s{zlib.crc32(sep.encode())}"
     )
 
@@ -142,11 +149,7 @@ def boilerplate_index_is_current(
     cheap marker param pre-check: a changed corpus, a re-hosted doc,
     OR a changed mining threshold all report stale (the exact corpus
     scan still runs only on metadata miss — params never need it)."""
-    try:
-        with open(os.path.join(path, _MARKER)) as f:
-            meta = json.load(f)
-    except (OSError, ValueError):
-        return False
+    meta = read_marker(os.path.join(path, _COMPLETE)) or {}
     if meta.get("param_key") != _param_key(min_frac_pct, min_docs, sep):
         return False
     return lm_model_is_current(
@@ -173,22 +176,9 @@ def boilerplate_strip_served(
     the (host, key) table, the shared position rewrite. No mining, no
     corpus pass — the deploy path for new shards. Affected docs only,
     (id, host, n_paras, n_removed, cleaned_text)."""
-    marker = os.path.join(path, _MARKER)
-    try:
-        with open(marker) as f:
-            meta = json.load(f)
-    except (OSError, ValueError) as e:
-        raise ValueError(
-            f"no complete boilerplate index at {path}; "
-            "build_boilerplate_index first."
-        ) from e
-    gen = meta.get("gen")
-    gen_dir = os.path.join(path, gen) if gen else None
-    if not gen_dir or not os.path.isdir(gen_dir):
-        raise ValueError(
-            f"boilerplate index marker at {path} references missing "
-            f"generation {gen!r}; rebuild with build_boilerplate_index."
-        )
+    meta, gen_dir = live_generation(
+        path, "boilerplate index", "build_boilerplate_index"
+    )
     from pyspark.sql import types as T
 
     reader = spark.read
@@ -205,7 +195,7 @@ def boilerplate_index_check(
 ) -> DataFrame:
     """``CheckIndex`` for the persisted boilerplate key set (VERDICT
     r12 #4): metadata level = the shared
-    :func:`lm_index.generation_check` over the lone ``keys`` artifact
+    :func:`epoch_log.generation_check` over the lone ``keys`` artifact
     plus PARAM COHERENCE — the mining thresholds are model identity
     here, so the marker's ``param_key`` must reproduce from its own
     recorded ``params`` and the live generation name must end with it
@@ -214,17 +204,10 @@ def boilerplate_index_check(
     null host/key and no duplicate (host, key) rows — a duplicate
     strips nothing extra but doubles the serve join's build side; a
     null host matches no document ever."""
-    from kafka_dbsync_spark.operators.lm_index import (
-        _check_report,
-        generation_check,
-    )
-
     rows, rec = generation_check(path, ("keys",), what="boilerplate index")
     if rec is None:
-        return _check_report(spark, rows)
-
-    def add(check: str, artifact: str, ok, detail: str = "") -> None:
-        rows.append((check, artifact, "PASS" if ok is True else ok, detail))
+        return rows.frame(spark)
+    add = rows.add
 
     # param coherence is MARKER-ONLY (zero data IO): it runs at the
     # metadata level too
@@ -256,11 +239,9 @@ def boilerplate_index_check(
             "legacy marker without params/param_key: staleness cannot "
             "pre-check thresholds cheaply",
         )
-    if not full or not rec.get("gen"):
-        return _check_report(spark, rows)
-    gen_dir = os.path.join(path, rec["gen"])
-    if not os.path.isdir(os.path.join(gen_dir, "keys")):
-        return _check_report(spark, rows)
+    gen_dir = generation_dir(path, rec, ("keys",))
+    if not full or gen_dir is None:
+        return rows.frame(spark)
     reader = spark.read
     if rec.get("keys_schema"):
         from pyspark.sql.types import StructType
@@ -294,4 +275,4 @@ def boilerplate_index_check(
         f"{st['n']} rows, {st['nd']} distinct (host, key) pairs — "
         "duplicates double the serve join's build side",
     )
-    return _check_report(spark, rows)
+    return rows.frame(spark)

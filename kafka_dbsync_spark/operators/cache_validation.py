@@ -51,6 +51,8 @@ import json
 import os
 from collections.abc import Callable
 
+from kafka_dbsync_spark.operators.epoch_log import _COMPLETE, read_marker
+
 # index_path -> (marker mtime_ns, src files signature) of the last
 # validation that PASSED. Process-local; a rebuilt marker or a changed
 # dataset listing misses the memo and re-validates.
@@ -89,7 +91,6 @@ def files_signature(src_path: str) -> str | None:
 
 def validate_cached_artifact(
     index_path: str,
-    marker_name: str,
     src_path: str | None,
     exact_check: Callable[[dict], bool],
     force_exact: bool = False,
@@ -102,26 +103,20 @@ def validate_cached_artifact(
     stores with coarse mtime granularity (see module docstring): it
     bypasses the memo and listing tiers and runs ``exact_check`` on
     every call, never memoizing."""
-    marker = os.path.join(index_path, marker_name)
+    marker = os.path.join(index_path, _COMPLETE)
     try:
         mtime = os.stat(marker).st_mtime_ns
     except OSError:
         _MEMO.pop(index_path, None)
         return False
     if force_exact:
-        try:
-            with open(marker) as f:
-                rec = json.load(f)
-        except (ValueError, OSError):
-            return False
-        return bool(exact_check(rec))
+        rec = read_marker(marker)
+        return rec is not None and bool(exact_check(rec))
     sig = files_signature(src_path) if src_path else None
     if sig is not None and _MEMO.get(index_path) == (mtime, sig):
         return True
-    try:
-        with open(marker) as f:
-            rec = json.load(f)
-    except (ValueError, OSError):
+    rec = read_marker(marker)
+    if rec is None:
         _MEMO.pop(index_path, None)
         return False
     if sig is not None and rec.get("src_sig") == sig:

@@ -9,7 +9,7 @@ eval suites are tiny next to a corpus), and decontamination an
 admission FILTER every ingest batch runs — not a batch job that
 re-shingles the benchmark per invocation.
 
-Artifacts under ``{path}`` (the shared ``lm_index.publish_generation``
+Artifacts under ``{path}`` (the shared ``epoch_log.publish_generation``
 protocol — immutable fingerprint-named generation dirs, atomic staging
 rename, marker-flips-last, loser-discards):
 
@@ -28,9 +28,6 @@ normalizes empty produce no gram rows and admit with ``overlap_bp = 0``
 
 from __future__ import annotations
 
-import json
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -38,13 +35,17 @@ from kafka_dbsync_spark.operators.corpus import (
     benchmark_grams,
     contamination_stats_against,
 )
-from kafka_dbsync_spark.operators.epoch_log import gate_foreach_batch
+from kafka_dbsync_spark.operators.epoch_log import (
+    gate_foreach_batch,
+    gen_name,
+    generation_check,
+    generation_dir,
+    live_generation,
+    publish_generation,
+)
 from kafka_dbsync_spark.operators.lm_index import (
-    _MARKER,
-    _gen_name,
     corpus_fingerprint,
     lm_model_is_current,
-    publish_generation,
 )
 
 
@@ -62,7 +63,7 @@ def build_benchmark_index(
     from kafka_dbsync_spark.operators.cache_validation import files_signature
 
     fp = fingerprint or corpus_fingerprint(benchmark, id_col, text_col)
-    gen = _gen_name(fp)
+    gen = gen_name(fp)
 
     def write_stage(stage: str) -> None:
         benchmark_grams(benchmark, text_col, k).write.mode(
@@ -95,22 +96,9 @@ def benchmark_index_is_current(
 
 
 def _read_index(spark: SparkSession, path: str) -> tuple[DataFrame, int]:
-    marker = os.path.join(path, _MARKER)
-    try:
-        with open(marker) as f:
-            meta = json.load(f)
-    except (OSError, ValueError) as e:
-        raise ValueError(
-            f"no complete benchmark index at {path}; "
-            "build_benchmark_index first."
-        ) from e
-    gen = meta.get("gen")
-    gen_dir = os.path.join(path, gen) if gen else None
-    if not gen_dir or not os.path.isdir(gen_dir):
-        raise ValueError(
-            f"benchmark index marker at {path} references missing "
-            f"generation {gen!r}; rebuild with build_benchmark_index."
-        )
+    meta, gen_dir = live_generation(
+        path, "benchmark index", "build_benchmark_index"
+    )
     return spark.read.parquet(f"{gen_dir}/grams"), int(meta.get("k", 8))
 
 
@@ -167,35 +155,26 @@ def benchmark_index_check(
 ) -> DataFrame:
     """``CheckIndex`` for the persisted decontamination gram index
     (VERDICT r12 #4): metadata level = the shared
-    :func:`lm_index.generation_check` over the lone ``grams`` artifact
+    :func:`epoch_log.generation_check` over the lone ``grams`` artifact
     plus the ``k`` parameter recorded positive (the gram order is
     model identity — scoring k'-gram docs against a k-gram index
     reports nonsense contamination). Full level: the gram table must
     be DISTINCT and null-free — ``benchmark_grams`` publishes a
     distinct set, so a duplicate inflates every per-doc match count
     and a null gram matches nothing."""
-    from kafka_dbsync_spark.operators.lm_index import (
-        _check_report,
-        generation_check,
-    )
-
     rows, rec = generation_check(path, ("grams",), what="benchmark index")
     if rec is not None:
         k = rec.get("k")
-        rows.append(
-            (
-                "gram_order_recorded",
-                "",
-                "PASS" if isinstance(k, int) and k > 0 else "FAIL",
-                f"marker k={k!r} — the gram order the gate must "
-                "shingle new docs at",
-            )
+        rows.add(
+            "gram_order_recorded",
+            "",
+            (isinstance(k, int) and k > 0) or "FAIL",
+            f"marker k={k!r} — the gram order the gate must shingle new "
+            "docs at",
         )
-    if rec is None or not full or not rec.get("gen"):
-        return _check_report(spark, rows)
-    gen_dir = os.path.join(path, rec["gen"])
-    if not os.path.isdir(os.path.join(gen_dir, "grams")):
-        return _check_report(spark, rows)
+    gen_dir = generation_dir(path, rec, ("grams",))
+    if not full or gen_dir is None:
+        return rows.frame(spark)
     st = (
         spark.read.parquet(f"{gen_dir}/grams")
         .agg(
@@ -205,15 +184,11 @@ def benchmark_index_check(
         )
         .head()
     )
-    rows.append(
-        (
-            "grams_distinct_non_null",
-            "grams",
-            "PASS"
-            if int(st["n"]) == int(st["nd"]) and int(st["nn"]) == 0
-            else "FAIL",
-            f"{st['n']} rows, {st['nd']} distinct, {st['nn']} null — "
-            "duplicates inflate every contamination score",
-        )
+    rows.add(
+        "grams_distinct_non_null",
+        "grams",
+        (int(st["n"]) == int(st["nd"]) and int(st["nn"]) == 0) or "FAIL",
+        f"{st['n']} rows, {st['nd']} distinct, {st['nn']} null — "
+        "duplicates inflate every contamination score",
     )
-    return _check_report(spark, rows)
+    return rows.frame(spark)

@@ -28,7 +28,6 @@ band hash is uniform for distinct content by construction).
 
 from __future__ import annotations
 
-import json
 import os
 
 from pyspark.sql import DataFrame, SparkSession
@@ -39,11 +38,16 @@ from kafka_dbsync_spark.operators.dedup import (
     with_minhash_signatures,
 )
 from kafka_dbsync_spark.operators.epoch_log import (
+    _COMPLETE,
     _INGEST,
+    CheckReport,
     _ingest_committed,
+    check_dirs_exist,
+    check_marker,
     commit,
     epoch_dir,
     read_marker,
+    sweep_leftovers,
     write_marker,
 )
 from kafka_dbsync_spark.operators.pq_index import (
@@ -51,8 +55,6 @@ from kafka_dbsync_spark.operators.pq_index import (
     dataset_fingerprint,
     index_is_built,
 )
-
-_MARKER = "_COMPLETE"
 
 
 def _sig_cols(num_hashes: int) -> list[str]:
@@ -112,7 +114,7 @@ def build_dedup_index(
     (with the corpus fingerprint and the hash-family parameters) only
     after both artifacts land — same crash-safety contract as
     build_pq_index."""
-    marker = os.path.join(path, _MARKER)
+    marker = os.path.join(path, _COMPLETE)
     if os.path.exists(marker):
         os.remove(marker)
     fp = corpus_fingerprint(docs, id_col)
@@ -137,9 +139,8 @@ def build_dedup_index(
     )
 
 
-def dedup_index_is_built(path: str, fingerprint: dict | None = None) -> bool:
-    """pq_index.index_is_built: the two families share the marker shape."""
-    return index_is_built(path, fingerprint)
+#: pq_index.index_is_built: the two families share the marker shape.
+dedup_index_is_built = index_is_built
 
 
 def dedup_check_incremental(
@@ -336,7 +337,7 @@ def dedup_index_remove(
             [(int(i),) for i in remove_ids], f"{id_col} long"
         )
     ids = F.broadcast(remove_ids.select(id_col).distinct())
-    marker = os.path.join(path, _MARKER)
+    marker = os.path.join(path, _COMPLETE)
     rec = read_marker(marker) or {}
     if "max_bucket_size" not in rec:
         # refuse BEFORE invalidating the marker (r6 advice #3): a
@@ -419,7 +420,7 @@ def dedup_index_compact(
     Returns {"signature_files": n} (the post-compaction file count)."""
     import shutil
 
-    marker = os.path.join(path, _MARKER)
+    marker = os.path.join(path, _COMPLETE)
     rec = read_marker(marker) or {}
     if "max_bucket_size" not in rec:
         raise ValueError(
@@ -472,7 +473,7 @@ def dedup_index_add(
         _banded(nsig, id_col, num_hashes, rows_per_band),
         id_col, max_bucket_size,
     ).write.mode("append").parquet(f"{path}/buckets")
-    marker = os.path.join(path, _MARKER)
+    marker = os.path.join(path, _COMPLETE)
     rec = read_marker(marker) or {}
     rec["fingerprint"] = _add_fingerprints(
         rec.get("fingerprint"), corpus_fingerprint(new_docs, id_col)
@@ -503,25 +504,11 @@ def dedup_index_check(
     signatures (the candidate join promotes bucket hits to signature
     verification — an orphan bucket row can never verify), and every
     ``band_idx`` within the hash family's band count."""
-    rows: list[tuple] = []
-
-    def add(check: str, artifact: str, ok, detail: str = "") -> None:
-        rows.append((check, artifact, "PASS" if ok is True else ok, detail))
-
-    def report() -> DataFrame:
-        return spark.createDataFrame(
-            rows,
-            "check string, artifact string, status string, detail string",
-        )
-
-    marker = os.path.join(path, _MARKER)
-    try:
-        with open(marker) as f:
-            rec = json.load(f)
-    except (OSError, ValueError) as e:
-        add("marker_parses", "", "FAIL", f"{e}")
-        return report()
-    add("marker_parses", "", True)
+    rows = CheckReport()
+    add = rows.add
+    rec = check_marker(rows, path)
+    if rec is None:
+        return rows.frame(spark)
     nh, rpb = rec.get("num_hashes"), rec.get("rows_per_band")
     add(
         "hash_family_recorded",
@@ -540,29 +527,17 @@ def dedup_index_check(
         else "legacy marker without max_bucket_size: remove/compact "
         "refuse until a rebuild upgrades it",
     )
-    for sub in ("signatures", "buckets"):
-        there = os.path.isdir(os.path.join(path, sub))
-        add(
-            "artifact_dir_exists",
-            sub,
-            there or "FAIL",
-            "" if there else "marker present but artifact missing",
-        )
-    for entry in sorted(os.listdir(path)):
-        p = os.path.join(path, entry)
-        if os.path.isdir(p) and entry.startswith("."):
-            add(
-                "staging_leftover",
-                entry,
-                "WARN",
-                "crashed staging/swap dir; safe to reclaim when no "
-                "writer is running",
-            )
-    if not full or not all(
-        os.path.isdir(os.path.join(path, s))
-        for s in ("signatures", "buckets")
-    ):
-        return report()
+    there = check_dirs_exist(
+        rows, path, ("signatures", "buckets"),
+        "marker present but artifact missing",
+    )
+    sweep_leftovers(
+        rows, path,
+        hidden="crashed staging/swap dir; safe to reclaim when no writer "
+        "is running",
+    )
+    if not full or not there:
+        return rows.frame(spark)
     sig = spark.read.parquet(f"{path}/signatures")
     id_col = sig.columns[0]
     st = sig.agg(
@@ -641,4 +616,4 @@ def dedup_index_check(
             f"{out_of_range} rows with band_idx outside [0, {n_bands}) "
             "— written by a different hash family than the marker's",
         )
-    return report()
+    return rows.frame(spark)

@@ -46,6 +46,34 @@ sides committed" as the epoch's commit.
 A state dir belongs to ONE streaming checkpoint: a new checkpoint
 restarts batchIds at 0, and those epochs would be swallowed by the
 committed/compacted guards.
+
+Generations, live reads and fsck
+--------------------------------
+Every persisted index family (pq, bm25, dedup, the bigram/trigram LMs,
+nb, decontam, boilerplate) keeps one ``_COMPLETE`` marker at its root,
+and the same marker-last rule makes it the commit of the artifacts.
+
+- **Publish.** A train-once family lands its artifacts in an immutable
+  generation dir ``gen-{n}_{max_id}_{sum_id}_{content}`` named by the
+  train-set fingerprint (:func:`gen_name`). :func:`publish_generation`
+  writes it to a pid-suffixed ``.stage-*`` dir, publishes it with one
+  ``os.rename`` (the loser of a race discards its identical copy) and
+  flips the marker to it last. The flat-table families (pq, dedup)
+  take the marker out before a rewrite and write it back after.
+- **Live reads.** Serve paths read the marker through
+  :func:`live_marker`, and a generation through
+  :func:`live_generation`. Both raise :class:`NoCompleteArtifact` (a
+  ``FileNotFoundError`` and a ``ValueError``) when the marker is absent
+  or unparseable, or names a generation whose dir is gone.
+- **fsck.** Each ``*_check`` builds one :class:`CheckReport` of
+  ``(check, artifact, status, detail)`` rows: PASS, WARN (still
+  servable) or FAIL (marker and artifacts disagree). The shared rungs
+  are :func:`check_marker` (the marker parses),
+  :func:`check_dirs_exist` and :func:`sweep_leftovers` (``.stage-*``
+  and other hidden dirs, and ``_COMPLETE.tmp.*`` files left by an
+  interrupted :func:`write_marker`; the caller classifies orphans and
+  ``.retired-*`` trash). :func:`generation_check` is the metadata level
+  of every generation family. Each family adds its own checks.
 """
 
 from __future__ import annotations
@@ -58,6 +86,8 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 _SUCCESS = "_SUCCESS"
+_COMPLETE = "_COMPLETE"
+_STAGE = ".stage-"
 _SEED = "seed"
 _INGEST = "ingest"
 
@@ -82,27 +112,280 @@ def _ingest_committed(path: str, epoch: int) -> bool:
     return committed(epoch_dir(path, _INGEST, epoch))
 
 
+def _load_marker(marker: str) -> dict:
+    with open(marker) as f:
+        return json.load(f)
+
+
 def read_marker(marker: str) -> dict | None:
     """The parsed JSON marker, or None when it is absent or unparseable."""
     try:
-        with open(marker) as f:
-            return json.load(f)
+        return _load_marker(marker)
     except (OSError, ValueError):
         return None
 
 
-def write_marker(marker: str, rec: dict | str) -> None:
-    """Replace ``marker`` atomically with ``rec`` (a dict dumped as JSON,
-    or already-serialized text): write ``<marker>.tmp.<pid>``, then
-    ``os.replace``. An interrupted write leaves the previous marker
-    intact and the tmp file behind (``generation_check`` reports it)."""
+def write_marker(marker: str, rec: dict) -> None:
+    """Replace ``marker`` atomically with ``rec`` dumped as JSON: write
+    ``<marker>.tmp.<pid>``, then ``os.replace``. An interrupted write
+    leaves the previous marker intact and the tmp file behind;
+    :func:`sweep_leftovers` reports it in every family's fsck."""
     tmp = f"{marker}.tmp.{os.getpid()}"
     with open(tmp, "w") as f:
-        if isinstance(rec, str):
-            f.write(rec)
-        else:
-            json.dump(rec, f)
+        json.dump(rec, f)
     os.replace(tmp, marker)
+
+
+# ---------------------------------------------------------------------------
+# Generations and live reads: {path}/_COMPLETE + {path}/gen-*/
+# ---------------------------------------------------------------------------
+class NoCompleteArtifact(FileNotFoundError, ValueError):
+    """No servable artifact at a path: the marker is absent or
+    unparseable, or names a generation whose dir is gone. It is both a
+    ``FileNotFoundError`` and a ``ValueError``, the two conventions the
+    families raised before they shared this reader."""
+
+
+def gen_name(fp: dict) -> str:
+    # every fingerprint term participates — two corpora with the same ids
+    # but different TEXT must land in different generation dirs
+    return f"gen-{fp['n']}_{fp['max_id']}_{fp['sum_id']}_{fp['content']}"
+
+
+def live_marker(path: str, what: str, builder: str) -> dict:
+    """The marker record of the complete ``what`` at ``path``; raises
+    :class:`NoCompleteArtifact` naming ``builder`` when there is none."""
+    rec = read_marker(os.path.join(path, _COMPLETE))
+    if rec is None:
+        raise NoCompleteArtifact(f"no complete {what} at {path}; {builder} first.")
+    return rec
+
+
+def generation_dir(path: str, rec: dict | None, subdirs=()) -> str | None:
+    """The dir of the generation ``rec`` names, when it and each of its
+    ``subdirs`` exist; else None."""
+    gen = (rec or {}).get("gen")
+    if not gen:
+        return None
+    d = os.path.join(path, gen)
+    if not all(os.path.isdir(os.path.join(d, s)) for s in ("", *subdirs)):
+        return None
+    return d
+
+
+def live_generation(path: str, what: str, builder: str) -> tuple[dict, str]:
+    """``(marker record, generation dir)`` of the live generation at
+    ``path``; raises :class:`NoCompleteArtifact` when the marker is
+    missing or names no existing generation."""
+    rec = live_marker(path, what, builder)
+    gen_dir = generation_dir(path, rec)
+    if gen_dir is None:
+        raise NoCompleteArtifact(
+            f"{what} marker at {path} references missing generation "
+            f"{rec.get('gen')!r}; rebuild with {builder}."
+        )
+    return rec, gen_dir
+
+
+def publish_dir(path: str, name: str, write_stage) -> str:
+    """Publish the immutable dir ``path/name`` unless it exists:
+    ``write_stage(stage)`` fills ``.stage-{name}-{pid}`` and ONE
+    ``os.rename`` publishes it. Contents are deterministic, so the
+    loser of a race discards its identical copy. Returns the dir."""
+    final_dir = os.path.join(path, name)
+    if not os.path.exists(final_dir):
+        stage = os.path.join(path, f"{_STAGE}{name}-{os.getpid()}")
+        write_stage(stage)
+        try:
+            os.rename(stage, final_dir)
+        except OSError:
+            shutil.rmtree(stage, ignore_errors=True)
+    return final_dir
+
+
+def publish_generation(path: str, gen: str, write_stage, marker_rec) -> None:
+    """Publish generation ``gen`` under ``path`` with :func:`publish_dir`
+    and flip the marker to it LAST, so readers only ever see complete
+    generations.
+    ``marker_rec`` is the record, or a callable of the published dir
+    for records whose scalars fold from the artifacts.
+
+    Retires ONLY the generation this build superseded (the one the
+    marker named at start) plus this process's own stage leftovers:
+    never another builder's in-flight ``.stage-*`` dir, never a gen a
+    racing build published. Deleting by enumeration would let a slow
+    stale builder destroy a newer build's generation. Unreferenced gens
+    from such races may linger; they are immutable, never served, and
+    :func:`generation_check` reports them as orphans."""
+    from kafka_dbsync_spark.operators.cache_validation import invalidate_memo
+
+    marker = os.path.join(path, _COMPLETE)
+    os.makedirs(path, exist_ok=True)
+    invalidate_memo(path)
+    prev_live_gen = (read_marker(marker) or {}).get("gen")
+    final_dir = publish_dir(path, gen, write_stage)
+    rec = marker_rec(final_dir) if callable(marker_rec) else marker_rec
+    write_marker(marker, dict(rec, gen=gen))
+    my_stage_suffix = f"-{os.getpid()}"
+    for name in os.listdir(path):
+        superseded = name == prev_live_gen and name != gen
+        my_stage = name.startswith(_STAGE) and name.endswith(my_stage_suffix)
+        if superseded or my_stage:
+            shutil.rmtree(os.path.join(path, name), ignore_errors=True)
+
+
+# ---------------------------------------------------------------------------
+# fsck rungs: one report, shared checks, family checks on top
+# ---------------------------------------------------------------------------
+_STAGING_DETAIL = (
+    "in-flight or crashed staging dir; safe to reclaim when no builder is "
+    "running"
+)
+
+
+class CheckReport(list):
+    """The rows of a ``CheckIndex``-style report: ``(check, artifact,
+    status, detail)`` tuples, status PASS / WARN / FAIL."""
+
+    def add(self, check: str, artifact: str, ok, detail: str = "") -> None:
+        """``ok`` is True for PASS, else the status string."""
+        self.append((check, artifact, "PASS" if ok is True else ok, detail))
+
+    def frame(self, spark: SparkSession, artifact_col: str = "artifact"):
+        return spark.createDataFrame(
+            list(self),
+            f"check string, {artifact_col} string, status string, "
+            "detail string",
+        )
+
+
+def check_marker(report: CheckReport, path: str) -> dict | None:
+    """The ``marker_parses`` rung: the parsed marker, or None after a
+    FAIL row carrying the read or parse error."""
+    try:
+        rec = _load_marker(os.path.join(path, _COMPLETE))
+    except (OSError, ValueError) as e:
+        report.add("marker_parses", "", "FAIL", f"{e}")
+        return None
+    report.add("marker_parses", "", True)
+    return rec
+
+
+def check_dirs_exist(
+    report: CheckReport,
+    root: str,
+    names,
+    missing: str,
+    check: str = "artifact_dir_exists",
+    prefix: str = "",
+) -> bool:
+    """One ``check`` row per dir in ``names`` under ``root``: PASS when
+    it exists, else FAIL with the ``missing`` detail. True when all do."""
+    ok_all = True
+    for name in names:
+        there = os.path.isdir(os.path.join(root, name))
+        ok_all = ok_all and there
+        report.add(check, f"{prefix}{name}", there or "FAIL", "" if there else missing)
+    return ok_all
+
+
+def sweep_leftovers(
+    report: CheckReport,
+    root: str,
+    keep=(),
+    hidden: str = _STAGING_DETAIL,
+    stage: str | None = None,
+    retired: str | None = None,
+    orphan: tuple[str, str] | None = None,
+    prefix: str = "",
+) -> None:
+    """The leftover sweep of one index dir, as WARN rows (all still
+    servable): ``_COMPLETE.tmp.*`` files from an interrupted
+    :func:`write_marker`, ``.stage-*`` dirs (``stage`` detail, default
+    ``hidden``) and other hidden dirs (``hidden`` detail) as
+    ``staging_leftover``; with ``retired``, ``.retired-*`` dirs as
+    ``retired_dir``; with ``orphan = (check, detail)``, every other dir
+    not in ``keep``. Other files are never reported: Hadoop committers
+    leave dot-files (``._SUCCESS.crc``) beside every parquet write."""
+    for entry in sorted(os.listdir(root)):
+        name = f"{prefix}{entry}"
+        if not os.path.isdir(os.path.join(root, entry)):
+            if entry.startswith(_COMPLETE + ".tmp."):
+                report.add(
+                    "staging_leftover", name, "WARN",
+                    "crashed marker tmp file; safe to reclaim",
+                )
+        elif entry in keep:
+            continue
+        elif retired is not None and entry.startswith(".retired-"):
+            report.add("retired_dir", name, "WARN", retired)
+        elif entry.startswith(_STAGE):
+            report.add("staging_leftover", name, "WARN", stage or hidden)
+        elif entry.startswith("."):
+            report.add("staging_leftover", name, "WARN", hidden)
+        elif orphan is not None:
+            report.add(orphan[0], name, "WARN", orphan[1])
+
+
+def generation_check(path: str, subdirs, what: str = "model cache"):
+    """The metadata level of every :func:`publish_generation` family's
+    fsck (the bigram/trigram LMs, nb, boilerplate, decontam): marker
+    parse, live generation recorded and its dir present, each artifact
+    of ``subdirs`` present, fingerprint and staleness metadata, and the
+    leftover sweep with unreferenced generations as
+    ``orphan_generation`` rows (publish-race losers: harmless,
+    reclaimable).
+
+    Returns ``(report, rec)``: rec is the parsed marker, or None when
+    unparseable (the report then holds the lone FAIL). ZERO data IO —
+    every probe is a stat or the marker JSON, safe on any serve path;
+    the family's ``full`` level adds the data probes."""
+    report = CheckReport()
+    rec = check_marker(report, path)
+    if rec is None:
+        return report, None
+    gen = rec.get("gen")
+    if not gen:
+        report.add(
+            "generation_recorded", "", "FAIL",
+            f"marker names no live generation — no servable {what}",
+        )
+        return report, rec
+    report.add("generation_recorded", gen, True)
+    if check_dirs_exist(
+        report, path, (gen,),
+        "marker references a missing generation dir — a reader would throw",
+        check="generation_dir_exists",
+    ):
+        check_dirs_exist(
+            report, os.path.join(path, gen), subdirs,
+            "generation published without this artifact", prefix=f"{gen}/",
+        )
+    report.add(
+        "fingerprint_recorded", "",
+        True if rec.get("fingerprint") else "WARN",
+        "" if rec.get("fingerprint")
+        else "legacy marker without fingerprint: staleness checks cannot "
+        "prove currency — rebuild to restore the ladder",
+    )
+    report.add(
+        "staleness_metadata", "", True,
+        "src_sig recorded (metadata-only staleness on the happy path)"
+        if rec.get("src_sig")
+        else "no src_sig: staleness pays the exact corpus fingerprint",
+    )
+    sweep_leftovers(
+        report, path, keep=(gen,),
+        hidden="hidden leftover dir; reclaimable",
+        stage=_STAGING_DETAIL,
+        orphan=(
+            "orphan_generation",
+            "immutable generation the marker does not reference "
+            "(publish-race loser or superseded): never served, "
+            "reclaimable disk",
+        ),
+    )
+    return report, rec
 
 
 # ---------------------------------------------------------------------------

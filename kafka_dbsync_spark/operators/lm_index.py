@@ -43,7 +43,6 @@ model join; nothing corpus-sized shuffles at serve time.
 
 from __future__ import annotations
 
-import json
 import os
 
 from pyspark.sql import DataFrame, SparkSession
@@ -52,12 +51,15 @@ from pyspark.sql import functions as F
 from kafka_dbsync_spark.functions.text import tokens
 from kafka_dbsync_spark.operators.corpus import doc_bigrams
 from kafka_dbsync_spark.operators.epoch_log import (
+    _COMPLETE,
     gate_foreach_batch,
+    gen_name,
+    generation_check,
+    generation_dir,
+    live_generation,
+    publish_generation,
     read_marker,
-    write_marker,
 )
-
-_MARKER = "_COMPLETE"
 
 
 def corpus_fingerprint(
@@ -92,12 +94,6 @@ def corpus_fingerprint(
     }
 
 
-def _gen_name(fp: dict) -> str:
-    # every fingerprint term participates — two corpora with the same ids
-    # but different TEXT must land in different generation dirs
-    return f"gen-{fp['n']}_{fp['max_id']}_{fp['sum_id']}_{fp['content']}"
-
-
 def build_lm_model(
     spark: SparkSession,
     docs: DataFrame,
@@ -125,7 +121,7 @@ def build_lm_model(
     # the caller may pass the fingerprint it just computed for the
     # staleness check — recomputing would re-scan the whole text column
     fp = fingerprint or corpus_fingerprint(docs, id_col, text_col)
-    gen = _gen_name(fp)
+    gen = gen_name(fp)
 
     def write_stage(stage: str) -> None:
         # r14 opt (VERDICT r13 #6): the two writes are separate jobs, so
@@ -160,64 +156,6 @@ def build_lm_model(
     publish_generation(path, gen, write_stage, rec)
 
 
-def publish_generation(
-    path: str,
-    gen: str,
-    write_stage,
-    marker_rec: dict,
-) -> None:
-    """The atomic generation-publish protocol, shared by every
-    train-once model cache (bigram/trigram LMs here, the NB classifier
-    in ``operators/nb_index.py``): ``write_stage(stage_dir)`` lands the
-    artifacts in a pid-suffixed staging dir, ONE ``os.rename`` publishes
-    the immutable generation (the loser of a concurrent race discards
-    its identical staging copy), and the marker flips to the new
-    generation LAST via atomic ``os.replace`` — readers only ever see
-    complete generations. Retires ONLY the generation this build
-    positively superseded (the one the marker referenced at start) plus
-    this process's own stage leftovers: never another builder's
-    in-flight ``.stage-*`` dir, never a gen a racing build published —
-    deleting by enumeration would let a slow stale builder destroy a
-    newer build's generation. Unreferenced gens from pathological races
-    may linger; they are bounded by corpus regenerations and harmless
-    (immutable, marker never points at them)."""
-    import shutil
-
-    from kafka_dbsync_spark.operators.cache_validation import invalidate_memo
-
-    marker = os.path.join(path, _MARKER)
-    os.makedirs(path, exist_ok=True)
-    invalidate_memo(path)
-    prev_live_gen = (read_marker(marker) or {}).get("gen")
-    final_dir = os.path.join(path, gen)
-    if not os.path.exists(final_dir):
-        stage = os.path.join(path, f".stage-{gen}-{os.getpid()}")
-        write_stage(stage)
-        try:
-            os.rename(stage, final_dir)
-        except OSError:
-            # another builder published this generation first; contents
-            # are deterministic, so theirs is identical — discard ours
-            shutil.rmtree(stage, ignore_errors=True)
-    # marker_rec may be a callable(final_dir) for models whose marker
-    # scalars fold from the PUBLISHED artifacts (never a second corpus
-    # pass — e.g. the trigram model's N/V from the vocab-sized cu table)
-    rec_base = marker_rec(final_dir) if callable(marker_rec) else marker_rec
-    write_marker(marker, dict(rec_base, gen=gen))
-    my_stage_suffix = f"-{os.getpid()}"
-    for name in os.listdir(path):
-        superseded = (
-            prev_live_gen is not None
-            and name == prev_live_gen
-            and name != gen
-        )
-        my_stage = name.startswith(".stage-") and name.endswith(
-            my_stage_suffix
-        )
-        if superseded or my_stage:
-            shutil.rmtree(os.path.join(path, name), ignore_errors=True)
-
-
 def lm_model_is_current(
     docs: DataFrame,
     path: str,
@@ -241,29 +179,20 @@ def lm_model_is_current(
     )
 
     def _exact(meta: dict) -> bool:
-        # a marker without a generation (or whose generation dir is
-        # gone) is not servable — report stale so the caller rebuilds
-        gen = meta.get("gen")
-        if gen is None or not os.path.isdir(os.path.join(path, gen)):
-            return False
         fp = fingerprint or corpus_fingerprint(docs, id_col, text_col)
-        return meta["fingerprint"] == fp
+        return meta.get("fingerprint") == fp
 
-    if src_path is not None:
-        # the metadata tiers can't see a vanished generation dir, so
-        # verify servability first (pure filesystem stat)
-        gen = (read_marker(os.path.join(path, _MARKER)) or {}).get("gen")
-        if gen is None or not os.path.isdir(os.path.join(path, gen)):
-            return False
-        return validate_cached_artifact(
-            path, _MARKER, src_path, _exact, force_exact=force_exact
-        )
-    marker = os.path.join(path, _MARKER)
-    if not os.path.exists(marker):
+    # a marker without a generation (or whose generation dir is gone) is
+    # not servable — report stale so the caller rebuilds. The metadata
+    # tiers can't see a vanished generation dir, so this stat runs first.
+    meta = read_marker(os.path.join(path, _COMPLETE))
+    if generation_dir(path, meta) is None:
         return False
-    with open(marker) as f:
-        meta = json.load(f)
-    return _exact(meta)
+    if src_path is None:
+        return _exact(meta)
+    return validate_cached_artifact(
+        path, src_path, _exact, force_exact=force_exact
+    )
 
 
 def lm_score(
@@ -278,13 +207,8 @@ def lm_score(
     Returns (id_col, n_bigrams, ppl) with the same determinism contract
     as the in-lineage operator: exact integer ratios -> 6-dp DECIMAL log
     terms -> order-independent sums -> one rounded double."""
-    marker = os.path.join(path, _MARKER)
-    if not os.path.exists(marker):
-        raise FileNotFoundError(f"no complete LM model at {path}")
-    with open(marker) as f:
-        meta = json.load(f)
+    meta, gen_dir = live_generation(path, "LM model", "build_lm_model")
     v = int(meta["V"])
-    gen_dir = os.path.join(path, meta["gen"])
     c12 = spark.read.parquet(f"{gen_dir}/c12")
     c1 = spark.read.parquet(f"{gen_dir}/c1")
     doc_grams = (
@@ -406,7 +330,7 @@ def build_trigram_model(
     from kafka_dbsync_spark.operators.cache_validation import files_signature
 
     fp = fingerprint or corpus_fingerprint(docs, id_col, text_col)
-    gen = _gen_name(fp)
+    gen = gen_name(fp)
 
     def write_stage(stage: str) -> None:
         # r14 opt (VERDICT r13 #6): three model writes are three jobs,
@@ -496,14 +420,11 @@ def trigram_score(
         doc_trigrams,
     )
 
-    marker = os.path.join(path, _MARKER)
-    if not os.path.exists(marker):
-        raise FileNotFoundError(f"no complete trigram model at {path}")
-    with open(marker) as f:
-        meta = json.load(f)
+    meta, gen_dir = live_generation(
+        path, "trigram model", "build_trigram_model"
+    )
     alpha = float(meta["alpha"])
     nv = int(meta["N"]) + int(meta["V"])
-    gen_dir = os.path.join(path, meta["gen"])
     c123 = spark.read.parquet(f"{gen_dir}/c123")
     cb = spark.read.parquet(f"{gen_dir}/cb")
     cu = spark.read.parquet(f"{gen_dir}/cu")
@@ -580,12 +501,7 @@ def moore_lewis_score_served(
     """
 
     def read_model(path: str, tag: str):
-        marker = os.path.join(path, _MARKER)
-        if not os.path.exists(marker):
-            raise FileNotFoundError(f"no complete LM model at {path}")
-        with open(marker) as f:
-            meta = json.load(f)
-        gen_dir = os.path.join(path, meta["gen"])
+        meta, gen_dir = live_generation(path, "LM model", "build_lm_model")
         c12 = spark.read.parquet(f"{gen_dir}/c12").select(
             "w1", "w2", F.col("n12").alias(f"n12_{tag}")
         )
@@ -644,132 +560,6 @@ def moore_lewis_score_served(
     )
 
 
-def generation_check(path: str, subdirs, what: str = "model cache"):
-    """The shared METADATA half of the Lucene-``CheckIndex``-style fsck
-    every ``publish_generation`` family runs (VERDICT r12 #4 — the
-    bigram/trigram LMs here, the NB classifier, the boilerplate key
-    set, and the decontamination gram index all publish through this
-    module's protocol, so they share one corruption surface): marker
-    parse, live-generation recorded + dir present, per-generation
-    artifact ``subdirs`` present, fingerprint/staleness-metadata
-    coherence, and a directory sweep classifying ``.stage-*`` crash
-    leftovers, marker tmp files, and ORPHAN generations the marker no
-    longer references (publish-race losers — harmless, reclaimable).
-
-    Returns ``(rows, rec)``: rows are ``(check, artifact, status,
-    detail)`` tuples for the family's report DataFrame (status PASS /
-    WARN = still servable / FAIL = marker and artifacts disagree); rec
-    is the parsed marker, or None when unparseable (rows then carry
-    the lone FAIL). ZERO data IO by construction — every probe is a
-    filesystem stat or the marker JSON, safe on any serve path; the
-    family's ``full`` level adds the data probes."""
-    rows: list[tuple] = []
-
-    def add(check: str, artifact: str, ok, detail: str = "") -> None:
-        rows.append((check, artifact, "PASS" if ok is True else ok, detail))
-
-    marker = os.path.join(path, _MARKER)
-    try:
-        with open(marker) as f:
-            rec = json.load(f)
-    except (OSError, ValueError) as e:
-        add("marker_parses", "", "FAIL", f"{e}")
-        return rows, None
-    add("marker_parses", "", True)
-    gen = rec.get("gen")
-    if not gen:
-        add(
-            "generation_recorded",
-            "",
-            "FAIL",
-            f"marker names no live generation — no servable {what}",
-        )
-        return rows, rec
-    add("generation_recorded", gen, True)
-    gen_dir = os.path.join(path, gen)
-    there = os.path.isdir(gen_dir)
-    add(
-        "generation_dir_exists",
-        gen,
-        there or "FAIL",
-        ""
-        if there
-        else "marker references a missing generation dir — a reader "
-        "would throw",
-    )
-    if there:
-        for sub in subdirs:
-            ok = os.path.isdir(os.path.join(gen_dir, sub))
-            add(
-                "artifact_dir_exists",
-                f"{gen}/{sub}",
-                ok or "FAIL",
-                "" if ok else "generation published without this artifact",
-            )
-    if rec.get("fingerprint"):
-        add("fingerprint_recorded", "", True)
-    else:
-        add(
-            "fingerprint_recorded",
-            "",
-            "WARN",
-            "legacy marker without fingerprint: staleness checks cannot "
-            "prove currency — rebuild to restore the ladder",
-        )
-    add(
-        "staleness_metadata",
-        "",
-        True,
-        "src_sig recorded (metadata-only staleness on the happy path)"
-        if rec.get("src_sig")
-        else "no src_sig: staleness pays the exact corpus fingerprint",
-    )
-    for entry in sorted(os.listdir(path)):
-        p = os.path.join(path, entry)
-        if not os.path.isdir(p):
-            if entry.startswith(_MARKER + ".tmp."):
-                add(
-                    "staging_leftover",
-                    entry,
-                    "WARN",
-                    "crashed marker tmp file; safe to reclaim",
-                )
-            continue
-        if entry == gen:
-            continue
-        if entry.startswith(".stage-"):
-            add(
-                "staging_leftover",
-                entry,
-                "WARN",
-                "in-flight or crashed staging dir; safe to reclaim when "
-                "no builder is running",
-            )
-        elif entry.startswith("."):
-            add(
-                "staging_leftover",
-                entry,
-                "WARN",
-                "hidden leftover dir; reclaimable",
-            )
-        else:
-            add(
-                "orphan_generation",
-                entry,
-                "WARN",
-                "immutable generation the marker does not reference "
-                "(publish-race loser or superseded): never served, "
-                "reclaimable disk",
-            )
-    return rows, rec
-
-
-def _check_report(spark: SparkSession, rows) -> DataFrame:
-    return spark.createDataFrame(
-        rows, "check string, artifact string, status string, detail string"
-    )
-
-
 def lm_index_check(
     spark: SparkSession, path: str, full: bool = True
 ) -> DataFrame:
@@ -796,23 +586,14 @@ def lm_index_check(
       Σ_w3 c123`` with every c123 context PRESENT in cb (the last
       bigram of each doc has no trigram continuation, so >= — a
       missing context or a deficit is corruption)."""
-    trigram = None
-    try:
-        with open(os.path.join(path, _MARKER)) as f:
-            rec0 = json.load(f)
-        trigram = "alpha" in rec0 or "N" in rec0
-    except (OSError, ValueError):
-        pass
+    rec0 = read_marker(os.path.join(path, _COMPLETE)) or {}
+    trigram = "alpha" in rec0 or "N" in rec0
     subdirs = ("c123", "cb", "cu") if trigram else ("c12", "c1")
     rows, rec = generation_check(path, subdirs, what="LM model")
-    if rec is None or not full or not rec.get("gen"):
-        return _check_report(spark, rows)
-    gen_dir = os.path.join(path, rec["gen"])
-    if not all(os.path.isdir(os.path.join(gen_dir, s)) for s in subdirs):
-        return _check_report(spark, rows)  # already FAILed above
-
-    def add(check: str, artifact: str, ok, detail: str = "") -> None:
-        rows.append((check, artifact, "PASS" if ok is True else ok, detail))
+    gen_dir = generation_dir(path, rec, subdirs)
+    if not full or gen_dir is None:
+        return rows.frame(spark)  # a missing artifact already FAILed
+    add = rows.add
 
     if trigram:
         cu = spark.read.parquet(f"{gen_dir}/cu")
@@ -886,4 +667,4 @@ def lm_index_check(
             "members — V below the observed vocabulary understates "
             "every unseen-mass denominator",
         )
-    return _check_report(spark, rows)
+    return rows.frame(spark)

@@ -16,10 +16,11 @@ Artifacts under ``{path}``:
     _COMPLETE                  marker: V (train vocab size), the
                                train-set fingerprint, the live gen name
 
-Publish / staleness / concurrency discipline is ``lm_index.py``'s,
-verbatim (``publish_generation``: immutable generation dirs, atomic
-staging rename, marker-flips-last, loser-discards; metadata-only
-staleness through ``lm_model_is_current``). The ONE difference is the
+Publish / staleness / concurrency discipline is the generation
+protocol of ``operators/epoch_log.py`` (``publish_generation``:
+immutable generation dirs, atomic staging rename, marker-flips-last,
+loser-discards), with metadata-only staleness through
+``lm_index.lm_model_is_current``. The ONE difference is the
 fingerprint: an NB model depends on the LABELS as much as the text, so
 the content term hashes (id, class, text) together — relabeling a
 training doc in place invalidates the model even when every byte of
@@ -35,9 +36,6 @@ query's DuckDB oracle unchanged.
 
 from __future__ import annotations
 
-import json
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -45,13 +43,17 @@ from kafka_dbsync_spark.operators.corpus import (
     nb_score_tables,
     nb_train_tables,
 )
-from kafka_dbsync_spark.operators.epoch_log import gate_foreach_batch
+from kafka_dbsync_spark.operators.epoch_log import (
+    gate_foreach_batch,
+    gen_name,
+    generation_check,
+    generation_dir,
+    live_generation,
+    publish_generation,
+)
 from kafka_dbsync_spark.operators.lm_index import (
-    _MARKER,
-    _gen_name,
     corpus_fingerprint,
     lm_model_is_current,
-    publish_generation,
 )
 
 
@@ -96,7 +98,7 @@ def build_nb_model(
 ) -> None:
     """One labeled-corpus pass → persisted NB model tables, published
     with the shared atomic-generation protocol
-    (``lm_index.publish_generation``)."""
+    (``epoch_log.publish_generation``)."""
     from kafka_dbsync_spark.operators.cache_validation import files_signature
 
     counts, totals, vocab, priors = nb_train_tables(
@@ -114,7 +116,7 @@ def build_nb_model(
 
     counts = counts.persist(StorageLevel.MEMORY_AND_DISK)
     fp = fingerprint or nb_fingerprint(train, class_col, id_col, text_col)
-    gen = _gen_name(fp)
+    gen = gen_name(fp)
 
     def write_stage(stage: str) -> None:
         counts.write.mode("overwrite").parquet(f"{stage}/counts")
@@ -219,21 +221,7 @@ def nb_classify_served(
     scoring arithmetic (``nb_score_tables``) — one (doc, token) agg, a
     C-way broadcast fanout, one per-doc argmax. No corpus pass, no
     retrain: unseen tokens are priced by add-one smoothing alone."""
-    marker = os.path.join(path, _MARKER)
-    try:
-        with open(marker) as f:
-            meta = json.load(f)
-    except (OSError, ValueError) as e:
-        raise ValueError(
-            f"no complete NB model at {path}; build_nb_model first."
-        ) from e
-    gen = meta.get("gen")
-    gen_dir = os.path.join(path, gen) if gen else None
-    if not gen_dir or not os.path.isdir(gen_dir):
-        raise ValueError(
-            f"NB model marker at {path} references missing generation "
-            f"{gen!r}; rebuild with build_nb_model."
-        )
+    meta, gen_dir = live_generation(path, "NB model", "build_nb_model")
     counts = spark.read.parquet(f"{gen_dir}/counts")
     totals = spark.read.parquet(f"{gen_dir}/totals")
     priors = spark.read.parquet(f"{gen_dir}/priors")
@@ -247,7 +235,7 @@ def nb_index_check(
     spark: SparkSession, path: str, full: bool = True
 ) -> DataFrame:
     """``CheckIndex`` for the persisted NB classifier (VERDICT r12 #4):
-    metadata level = the shared :func:`lm_index.generation_check` over
+    metadata level = the shared :func:`epoch_log.generation_check` over
     the ``counts``/``totals``/``priors`` artifact set (zero data IO);
     full level recounts every scalar the serve path trusts:
 
@@ -260,21 +248,12 @@ def nb_index_check(
       frequencies of a partition of the train set);
     - marker ``V == countDistinct(counts.tok)`` — the exact derivation
       ``build_nb_model`` ran at publish."""
-    from kafka_dbsync_spark.operators.lm_index import (
-        _check_report,
-        generation_check,
-    )
-
     subdirs = ("counts", "totals", "priors")
     rows, rec = generation_check(path, subdirs, what="NB model")
-    if rec is None or not full or not rec.get("gen"):
-        return _check_report(spark, rows)
-    gen_dir = os.path.join(path, rec["gen"])
-    if not all(os.path.isdir(os.path.join(gen_dir, s)) for s in subdirs):
-        return _check_report(spark, rows)
-
-    def add(check: str, artifact: str, ok, detail: str = "") -> None:
-        rows.append((check, artifact, "PASS" if ok is True else ok, detail))
+    gen_dir = generation_dir(path, rec, subdirs)
+    if not full or gen_dir is None:
+        return rows.frame(spark)
+    add = rows.add
 
     counts = spark.read.parquet(f"{gen_dir}/counts")
     totals = spark.read.parquet(f"{gen_dir}/totals")
@@ -338,4 +317,4 @@ def nb_index_check(
         f"marker V={rec.get('V')} vs {v_obs} distinct tokens in counts "
         "— V is every smoothing denominator's vocab term",
     )
-    return _check_report(spark, rows)
+    return rows.frame(spark)

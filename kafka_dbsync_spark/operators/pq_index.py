@@ -39,7 +39,6 @@ artifact lands) so mixed-generation artifacts are never served
 
 from __future__ import annotations
 
-import json
 import os
 import tempfile
 
@@ -47,11 +46,17 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from kafka_dbsync_spark.operators.epoch_log import (
+    _COMPLETE,
     _INGEST,
+    CheckReport,
     _ingest_committed,
+    check_dirs_exist,
+    check_marker,
     commit,
     epoch_dir,
+    live_marker,
     read_marker,
+    sweep_leftovers,
     write_marker,
 )
 from kafka_dbsync_spark.operators.pq import (
@@ -59,8 +64,6 @@ from kafka_dbsync_spark.operators.pq import (
     pq_encode,
     with_residuals,
 )
-
-_MARKER = "_COMPLETE"
 
 ARTIFACTS = ("centroids", "pq_codebooks", "codes", "flat_codebooks", "flat_codes")
 
@@ -257,7 +260,7 @@ def build_pq_index(
 
     from kafka_dbsync_spark.operators.concurrency import run_job_chains
 
-    marker = os.path.join(path, _MARKER)
+    marker = os.path.join(path, _COMPLETE)
     invalidate_memo(path)
     if os.path.exists(marker):
         os.remove(marker)
@@ -324,7 +327,6 @@ def index_is_current(
 
     return validate_cached_artifact(
         path,
-        _MARKER,
         src_path,
         lambda rec: rec.get("fingerprint")
         == dataset_fingerprint(embeddings, id_col),
@@ -338,7 +340,7 @@ def index_is_built(path: str, fingerprint: dict | None = None) -> bool:
     regenerated in place invalidates the cached index. Markers from
     before fingerprints were recorded (non-JSON content) count as
     stale whenever a fingerprint is supplied."""
-    marker = os.path.join(path, _MARKER)
+    marker = os.path.join(path, _COMPLETE)
     if not os.path.exists(marker):
         return False
     if fingerprint is None:
@@ -390,33 +392,12 @@ def pq_index_check(
     PHYSICAL cell rewrites — every marker ``removed_ids`` entry ABSENT
     from both code tables (a present one means a takedown was
     resurrected)."""
-    rows: list[tuple] = []
-
-    def add(check: str, artifact: str, ok, detail: str = "") -> None:
-        rows.append((check, artifact, "PASS" if ok is True else ok, detail))
-
-    def report() -> DataFrame:
-        return spark.createDataFrame(
-            rows,
-            "check string, artifact string, status string, detail string",
-        )
-
-    marker = os.path.join(path, _MARKER)
-    try:
-        with open(marker) as f:
-            rec = json.load(f)
-    except (OSError, ValueError) as e:
-        add("marker_parses", "", "FAIL", f"{e}")
-        return report()
-    add("marker_parses", "", True)
-    for a in ARTIFACTS:
-        there = os.path.isdir(os.path.join(path, a))
-        add(
-            "artifact_dir_exists",
-            a,
-            there or "FAIL",
-            "" if there else "marker present but artifact missing",
-        )
+    rows = CheckReport()
+    add = rows.add
+    rec = check_marker(rows, path)
+    if rec is None:
+        return rows.frame(spark)
+    check_dirs_exist(rows, path, ARTIFACTS, "marker present but artifact missing")
     digest = rec.get("id_digest")
     if _digest_usable(digest):
         add(
@@ -446,33 +427,20 @@ def pq_index_check(
     )
     codes_root = os.path.join(path, "codes")
     if os.path.isdir(codes_root):
-        for entry in sorted(os.listdir(codes_root)):
-            # DIRECTORIES only: Hadoop committers drop dot-FILES
-            # (._SUCCESS.crc checksums) beside every parquet write —
-            # normal artifacts, not crashed staging state
-            if entry.startswith(".") and os.path.isdir(
-                os.path.join(codes_root, entry)
-            ):
-                add(
-                    "staging_leftover",
-                    f"codes/{entry}",
-                    "WARN",
-                    "crashed compaction/staging dir; safe to reclaim when "
-                    "no writer is running",
-                )
-    for entry in sorted(os.listdir(path)):
-        if entry.startswith(".") and os.path.isdir(os.path.join(path, entry)):
-            add(
-                "staging_leftover",
-                entry,
-                "WARN",
-                "crashed staging dir; safe to reclaim when no writer is "
-                "running",
-            )
+        sweep_leftovers(
+            rows, codes_root, prefix="codes/",
+            hidden="crashed compaction/staging dir; safe to reclaim when no "
+            "writer is running",
+        )
+    sweep_leftovers(
+        rows, path,
+        hidden="crashed staging dir; safe to reclaim when no writer is "
+        "running",
+    )
     if not full or not all(
         os.path.isdir(os.path.join(path, a)) for a in ("codes", "flat_codes")
     ):
-        return report()
+        return rows.frame(spark)
 
     fp = rec.get("fingerprint")
     codes = spark.read.parquet(f"{path}/codes")
@@ -585,7 +553,7 @@ def pq_index_check(
             "removal is physical, a present one is a resurrected "
             "takedown",
         )
-    return report()
+    return rows.frame(spark)
 
 
 def ivfpq_search_index(
@@ -797,7 +765,7 @@ def pq_index_add(
     vectors land in. Periodic full rebuilds (``build_pq_index``)
     re-train when drift accumulates — the standard IVF operating
     procedure, measured by the ``ann_recall_report`` curve."""
-    marker = os.path.join(path, _MARKER)
+    marker = os.path.join(path, _COMPLETE)
     rec = read_marker(marker) or {}
     # the batch bloom is pinned to the MARKER digest's m so the fold
     # below OR-composes instead of dropping the bloom (r13: m scales
@@ -912,14 +880,8 @@ def pq_index_remove(
     ids = sorted({int(i) for i in remove_ids})
     if not ids:
         raise ValueError("remove_ids must be non-empty")
-    marker = os.path.join(path, _MARKER)
-    if not os.path.exists(marker):
-        raise ValueError(
-            f"no complete index at {path} (missing {_MARKER}); removing "
-            "from an absent or mid-build index is a caller bug — build "
-            "with build_pq_index first."
-        )
-    rec = read_marker(marker) or {}
+    marker = os.path.join(path, _COMPLETE)
+    rec = live_marker(path, "index", "build_pq_index")
     codes = spark.read.parquet(f"{path}/codes")
     # Refuse a takedown that would empty the index BEFORE invalidating
     # the marker (ADVICE r8): with every cell rmtree'd the fingerprint
@@ -991,7 +953,7 @@ def index_serves_removal(
     runs: marker JSON + one os.scandir of the source."""
     from kafka_dbsync_spark.operators.cache_validation import files_signature
 
-    rec = read_marker(os.path.join(path, _MARKER))
+    rec = read_marker(os.path.join(path, _COMPLETE))
     if rec is None or rec.get("removed_ids") != sorted(
         {int(i) for i in removed_ids}
     ):
@@ -1060,12 +1022,8 @@ def pq_index_compact(
 
     from kafka_dbsync_spark.operators.cache_validation import invalidate_memo
 
-    marker = os.path.join(path, _MARKER)
-    if not os.path.exists(marker):
-        raise ValueError(
-            f"no complete index at {path} (missing {_MARKER}); compacting "
-            "an absent or mid-build index is a caller bug."
-        )
+    marker = os.path.join(path, _COMPLETE)
+    rec = live_marker(path, "index", "build_pq_index")
     # Pending-ingest guard (ADVICE r8, medium): an ingest epoch that
     # crashed before its ingest/e{N} commit may have left
     # e{N}-prefixed files in live cell dirs (and/or its staging dirs).
@@ -1083,8 +1041,6 @@ def pq_index_compact(
             "miss them and duplicate the rows). Let the stream replay "
             "and commit them, then compact."
         )
-    with open(marker) as f:
-        rec_raw = f.read()
     invalidate_memo(path)
     os.remove(marker)
 
@@ -1115,7 +1071,7 @@ def pq_index_compact(
         ).parquet(flat_staging)
         shutil.rmtree(flat_src)
         os.rename(flat_staging, flat_src)
-    write_marker(marker, rec_raw)
+    write_marker(marker, rec)
     invalidate_memo(path)
     return {
         "cells": len(cells),
@@ -1193,12 +1149,8 @@ def pq_index_ingest_foreach_batch(
         epoch = int(epoch_id)
         if _ingest_committed(path, epoch):
             return
-        marker = os.path.join(path, _MARKER)
-        if not os.path.exists(marker):
-            raise ValueError(
-                f"no complete index at {path}; build_pq_index must run "
-                "before streaming ingest."
-            )
+        marker = os.path.join(path, _COMPLETE)
+        rec = live_marker(path, "index", "build_pq_index")
         cents = spark.read.parquet(f"{path}/centroids")
         cb = spark.read.parquet(f"{path}/pq_codebooks")
         fcb = spark.read.parquet(f"{path}/flat_codebooks")
@@ -1219,7 +1171,6 @@ def pq_index_ingest_foreach_batch(
         # a redelivered epoch just re-sets the same bits). The
         # fingerprint refresh stays AFTER the moves (step 4): it is
         # derived from final on-disk state.
-        rec = read_marker(marker) or {}
         if "id_digest" in rec:
             _rec_d = rec.get("id_digest") or {}
             folded = _digest_or(
@@ -1350,14 +1301,10 @@ def build_pq_shard(
 
     from kafka_dbsync_spark.operators.cache_validation import invalidate_memo
 
-    if not os.path.exists(os.path.join(quantizer_src, _MARKER)):
-        raise ValueError(
-            f"no complete index at {quantizer_src} to take quantizers "
-            "from; train with build_pq_index first."
-        )
+    live_marker(quantizer_src, "index", "build_pq_index")
     from kafka_dbsync_spark.operators.concurrency import run_job_chains
 
-    marker = os.path.join(path, _MARKER)
+    marker = os.path.join(path, _COMPLETE)
     invalidate_memo(path)
     if os.path.exists(marker):
         os.remove(marker)
@@ -1489,14 +1436,9 @@ def pq_index_merge(
 
     from kafka_dbsync_spark.operators.cache_validation import invalidate_memo
 
-    dst_marker = os.path.join(dst_path, _MARKER)
-    src_marker = os.path.join(src_path, _MARKER)
-    for p, m in ((dst_path, dst_marker), (src_path, src_marker)):
-        if not os.path.exists(m):
-            raise ValueError(
-                f"no complete index at {p} (missing {_MARKER}); both merge "
-                "sides must be complete indexes."
-            )
+    dst_marker = os.path.join(dst_path, _COMPLETE)
+    rec = live_marker(dst_path, "index", "build_pq_index")
+    src_rec = live_marker(src_path, "index", "build_pq_index")
     pending = _pending_ingest_epochs(src_path)
     if pending:
         raise ValueError(
@@ -1513,8 +1455,6 @@ def pq_index_merge(
             "same precondition). Re-encode one side with build_pq_shard "
             "from the other's quantizers."
         )
-    rec = read_marker(dst_marker) or {}
-    src_rec = read_marker(src_marker) or {}
     # Merge guards, metadata-first (VERDICT r10 #3: the r10 probes were
     # three Spark jobs re-reading codes at every merge — right checks,
     # wrong cost model). Each guard now runs the id_digest ladder

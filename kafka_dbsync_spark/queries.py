@@ -2937,11 +2937,9 @@ def q_bm25_tiered_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
             fn(docs.filter(F.col("doc_id") % 12 == r), i)
         merged = bm25_merge_tiered(spark, work, max_segments=2)
         assert merged == 3, merged
-        import json as _json
-        import os as _os
+        from kafka_dbsync_spark.operators.epoch_log import live_marker
 
-        with open(_os.path.join(work, "_COMPLETE")) as f:
-            rec = _json.load(f)
+        rec = live_marker(work, "BM25 index", "build_bm25_index")
         # the big build segment must be untouched (policy merged ONLY
         # the three small epoch segments)
         assert rec["segments"][0].startswith("gen"), rec["segments"]
@@ -12476,7 +12474,7 @@ def q_family_fsck_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     """One census over the five remaining index families' fsck
     operators (VERDICT r12 #4/#5 — lm_index_check, nb_index_check,
     boilerplate_index_check, benchmark_index_check, dedup_index_check,
-    all sharing ``lm_index.generation_check``'s metadata half): build
+    all sharing ``epoch_log.generation_check``'s metadata half): build
     each family's artifact from a deterministic 1-in-7 document
     subsample, fsck at the FULL level, and union the (family, check,
     status) counts. Structural and all-PASS by construction; any

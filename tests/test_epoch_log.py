@@ -120,3 +120,68 @@ def test_interrupted_marker_leftover_is_the_name_fsck_sweeps(tmp_path):
     rows, parsed = generation_check(path, ("c12",))
     assert parsed == rec
     assert [r[2] for r in rows if r[0] == "staging_leftover"] == ["WARN"]
+
+
+def _staging_leftovers(report):
+    """``(artifact or segment, status)`` of a report's leftover rows."""
+    return [(r[1], r[2]) for r in report.collect() if r[0] == "staging_leftover"]
+
+
+def test_dedup_check_reports_interrupted_marker_tmp(spark, tmp_path, monkeypatch):
+    from kafka_dbsync_spark.operators.dedup_index import dedup_index_check
+
+    idx = str(tmp_path / "idx")
+    build_dedup_index(spark, spark.createDataFrame(CORPUS, SCHEMA), idx)
+    _interrupt_marker_dump(monkeypatch)
+    with pytest.raises(OSError, match="simulated"):
+        dedup_index_add(spark, idx, spark.createDataFrame([(7, NOVEL)], SCHEMA))
+    monkeypatch.undo()
+    tmp = f"_COMPLETE.tmp.{os.getpid()}"
+    assert _staging_leftovers(dedup_index_check(spark, idx, full=False)) == [
+        (tmp, "WARN")
+    ]
+
+
+def test_pq_check_reports_interrupted_marker_tmp(spark, tmp_path, monkeypatch):
+    from pyspark.sql import functions as F
+
+    from kafka_dbsync_spark.operators.pq_index import (
+        build_pq_index,
+        pq_index_add,
+        pq_index_check,
+    )
+    from kafka_dbsync_spark.queries import QUERIES
+
+    emb = spark.read.parquet(f"{SF_SMOKE}/embeddings.parquet").limit(60)
+    path = str(tmp_path / "pq")
+    build_pq_index(
+        spark, emb.filter(F.col("vec_id") % 2 == 0),
+        QUERIES["ivf_centroids"](spark, SF_SMOKE), path,
+    )
+    _interrupt_marker_dump(monkeypatch)
+    with pytest.raises(OSError, match="simulated"):
+        pq_index_add(spark, path, emb.filter(F.col("vec_id") % 2 != 0))
+    monkeypatch.undo()
+    tmp = f"_COMPLETE.tmp.{os.getpid()}"
+    assert _staging_leftovers(pq_index_check(spark, path, full=False)) == [
+        (tmp, "WARN")
+    ]
+
+
+def test_bm25_check_reports_interrupted_marker_tmp(spark, tmp_path, monkeypatch):
+    from kafka_dbsync_spark.operators.bm25_index import (
+        bm25_index_add,
+        bm25_index_check,
+        build_bm25_index,
+    )
+
+    idx = str(tmp_path / "idx")
+    build_bm25_index(spark, spark.createDataFrame(CORPUS, SCHEMA), idx)
+    _interrupt_marker_dump(monkeypatch)
+    with pytest.raises(OSError, match="simulated"):
+        bm25_index_add(spark, spark.createDataFrame([(7, NOVEL)], SCHEMA), idx)
+    monkeypatch.undo()
+    tmp = f"_COMPLETE.tmp.{os.getpid()}"
+    assert _staging_leftovers(bm25_index_check(spark, idx, full=False)) == [
+        (tmp, "WARN")
+    ]

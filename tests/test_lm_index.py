@@ -271,3 +271,41 @@ def test_moore_lewis_served_requires_both_models(spark, corpus, tmp_path):
         moore_lewis_score_served(
             spark, p_in, str(tmp_path / "missing"), corpus
         )
+
+
+def test_served_readers_refuse_a_broken_generation(spark, corpus, tmp_path):
+    """A marker whose generation dir is gone, or that names none, is
+    refused up front by all three served LM readers with the shared
+    "references missing generation" error (not a Spark path error or a
+    KeyError from inside the reader)."""
+    import json
+    import shutil
+
+    from kafka_dbsync_spark.operators.lm_index import (
+        build_trigram_model,
+        moore_lewis_score_served,
+        trigram_score,
+    )
+
+    bi, tri = str(tmp_path / "bi"), str(tmp_path / "tri")
+    build_lm_model(spark, corpus, bi)
+    build_trigram_model(spark, corpus, tri)
+    readers = (
+        lambda: lm_score(spark, bi, corpus),
+        lambda: trigram_score(spark, tri, corpus),
+        lambda: moore_lewis_score_served(spark, bi, bi, corpus),
+    )
+    markers = {}
+    for p in (bi, tri):
+        with open(os.path.join(p, "_COMPLETE")) as f:
+            markers[p] = json.load(f)
+        shutil.rmtree(os.path.join(p, markers[p]["gen"]))
+    for read in readers:
+        with pytest.raises(ValueError, match="references missing generation"):
+            read()
+    for p, rec in markers.items():
+        with open(os.path.join(p, "_COMPLETE"), "w") as f:
+            json.dump({k: v for k, v in rec.items() if k != "gen"}, f)
+    for read in readers:
+        with pytest.raises(ValueError, match="references missing generation"):
+            read()
